@@ -217,7 +217,7 @@ def near_dup_pairs_for(docs: DataFrame) -> DataFrame:
         "doc_id", F.transform("sh", lambda s: F.xxhash64(s)).alias("shid")
     )
     sig = ids.select("doc_id", _minhash_sig(F.col("shid")).alias("sig"))
-    # Band key: xxhash64 of the band's two raw signature longs (r14 —
+    # Band key: xxhash64 of the band's BAND_ROWS raw signature longs (r14 —
     # the string concat+cast formulation re-walked 32 stringified longs
     # per doc). Equal band rows hash equal either way, so no true
     # candidate is ever lost by this change; only hash-collision false
@@ -230,8 +230,10 @@ def near_dup_pairs_for(docs: DataFrame) -> DataFrame:
                 lambda b: F.struct(
                     b.alias("band_id"),
                     F.xxhash64(
-                        F.element_at(F.col("sig"), b * BAND_ROWS + 1),
-                        F.element_at(F.col("sig"), b * BAND_ROWS + 2),
+                        *(
+                            F.element_at(F.col("sig"), b * BAND_ROWS + (r + 1))
+                            for r in range(BAND_ROWS)
+                        )
                     ).alias("band_hash"),
                 ),
             )

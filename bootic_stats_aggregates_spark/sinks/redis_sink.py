@@ -7,13 +7,17 @@ unique-visitor sets (SADD) — SURVEY.md §2.1 ``[REF⟂ tracker.go]``
 
 Spark-first split:
 
-1. **Command generation is a dataflow** (`counter_commands` /
-   `ranking_commands` / `unique_commands`): micro-batch DataFrame ->
-   aggregated (cmd, key, field/member, delta) rows. Pure, deterministic,
-   oracle-checkable — and it does the heavy lifting (the shuffle) in Spark,
-   so Redis receives ONE increment per (key, field) per batch instead of
-   one per event. That per-batch combine is what makes the sink survive
-   100 TB: Redis traffic scales with |groups|, not |events|.
+1. **Command generation is one pass per batch** (`batch_commands`): one
+   ``select`` projects each event into its five command rows (HINCRBY
+   ``n`` and ``cents``, ZINCRBY ``top_users`` and ``top_paths``, SADD
+   ``uniq``), and one group-by on (cmd, key, member) sums their deltas.
+   One scan, one shuffle and one Spark job per batch, and Redis receives
+   ONE increment per (key, member) per batch instead of one per event.
+   That per-batch combine is what makes the sink survive 100 TB: Redis
+   traffic scales with |groups|, not |events|. The public builders
+   (`counter_commands` / `ranking_commands` / `path_ranking_commands` /
+   `unique_commands`) run the same plan over their own commands, so the
+   rows the ``snk_redis_*`` oracles check are the rows the sink stages.
 2. **The writer is a two-phase pipelined apply** (`RedisCounterSink`):
    ``foreachBatch`` -> STAGE: ``foreachPartition`` pipelines the batch's
    command rows into a per-batch staging hash with HSET (overwrite =
@@ -39,7 +43,7 @@ from __future__ import annotations
 import os
 from collections import defaultdict
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 try:  # pragma: no cover - redis-py is not installed in this container
@@ -49,81 +53,103 @@ except ImportError:  # pragma: no cover
 
 KEY_PREFIX = "stats"
 BUCKET_FMT = "yyyy:MM:dd:HH"  # the reference's {y}:{m}:{d}[:{h}] key schema
+DAY_FMT = "yyyy:MM:dd"
+
+
+def _or_dash(c: Column) -> Column:
+    """NULL -> explicit '-' sentinel. Redis members cannot be NULL, and
+    concat_ws would silently DROP a NULL key segment, leaving a short key
+    that corrupts the schema (hostile sweeps r5/r7)."""
+    return F.coalesce(c, F.lit("-"))
+
+
+def _type_key(prefix: str, fmt: str | None = None) -> Column:
+    """``{prefix}:{event_type}[:{ts formatted by fmt}]``; clock-less events
+    (NULL ts) go to an explicit '-' bucket."""
+    parts = [F.lit(prefix), F.col("event_type")]
+    if fmt:
+        parts.append(_or_dash(F.date_format("ts", fmt)))
+    return F.concat_ws(":", *parts)
+
+
+def _user() -> Column:
+    return _or_dash(F.col("user_id").cast("string"))
+
+
+def _path() -> Column:
+    """Top-page member. The fixture events carry no URL, so one is
+    synthesized from the JSON payload; ``parse_url`` is the real JVM-side
+    extraction a deployment would run on the referrer/page field. NULL or
+    unparseable props -> '-'."""
+    url = F.concat(
+        F.lit("https://shop.example.com/p/"),
+        F.get_json_object("props", "$.k"),
+    )
+    return _or_dash(F.parse_url(url, F.lit("PATH")))
+
+
+def _commands() -> dict[str, Column]:
+    """Every command one event contributes, as (cmd, key, member, delta)."""
+    one = F.lit(1).cast("long")
+    hour = _type_key(KEY_PREFIX, BUCKET_FMT)
+
+    def cmd(name: str, key: Column, member: Column, delta: Column) -> Column:
+        return F.struct(F.lit(name).alias("cmd"), key.alias("key"),
+                        member.alias("member"), delta.alias("delta"))
+
+    return {
+        "n": cmd("HINCRBY", hour, F.lit("n"), one),
+        "cents": cmd(
+            "HINCRBY", hour, F.lit("cents"),
+            F.round(F.col("value") * 100).cast("long"),
+        ),
+        "top_users": cmd("ZINCRBY", _type_key("top_users"), _user(), one),
+        "top_paths": cmd("ZINCRBY", _type_key("top_paths", DAY_FMT), _path(), one),
+        "uniq": cmd("SADD", _type_key("uniq", DAY_FMT), _user(), one),
+    }
+
+
+def _aggregate(events: DataFrame, names) -> DataFrame:
+    """Project each event into the named commands, then combine them per
+    (cmd, key, member) in one shuffle.
+
+    The delta sum is ``count(*)`` for ``n`` and ZINCRBY and the value sum
+    for ``cents``; SADD ignores it, so its group-by is a ``distinct``. NULL
+    policy (uniform across the command family): a bucket whose every value
+    is NULL sums to NULL — an unknown amount increments nothing, so the
+    delta is 0 (HINCRBY cannot carry NULL).
+    """
+    cmds = _commands()
+    return (
+        events.select(F.inline(F.array(*(cmds[n] for n in names))))
+        .groupBy("cmd", "key", "member")
+        .agg(F.coalesce(F.sum("delta"), F.lit(0)).alias("delta"))
+    )
+
+
+def batch_commands(events: DataFrame) -> DataFrame:
+    """Events -> every Redis command of the batch, one (cmd, key, member,
+    delta) row per command identity, in one scan and one shuffle."""
+    return _aggregate(events, ("n", "cents", "top_users", "top_paths", "uniq"))
 
 
 def counter_commands(events: DataFrame) -> DataFrame:
-    """Events -> HINCRBY command rows, one per (type, hour bucket, field).
-
-    Two fields per bucket hash: ``n`` (event count) and ``cents`` (value
-    sum in integer cents — exact, mergeable, no float drift in Redis).
-    """
-    bucket_key = F.concat_ws(
-        ":",
-        F.lit(KEY_PREFIX),
-        F.col("event_type"),
-        # clock-less events (NULL ts) go to an explicit '-' bucket:
-        # concat_ws would silently DROP the NULL segment, leaving a
-        # two-part key that corrupts the schema (hostile sweep r7)
-        F.coalesce(F.date_format("ts", BUCKET_FMT), F.lit("-")),
-    )
-    # NULL policy (uniform across the redis command family, hostile-fixture
-    # sweep r5): a bucket whose every value is NULL sums to NULL — an
-    # unknown amount increments nothing, so the delta is 0 (HINCRBY cannot
-    # carry NULL and the sink's str(int(delta)) would crash).
-    agg = events.groupBy(bucket_key.alias("key")).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.coalesce(
-            F.sum(F.round(F.col("value") * 100).cast("long")), F.lit(0)
-        ).alias("cents"),
-    )
-    n_rows = agg.select(
-        F.lit("HINCRBY").alias("cmd"),
-        "key",
-        F.lit("n").alias("field"),
-        F.col("n").alias("delta"),
-    )
-    cents_rows = agg.select(
-        F.lit("HINCRBY").alias("cmd"),
-        "key",
-        F.lit("cents").alias("field"),
-        F.col("cents").alias("delta"),
-    )
-    return n_rows.unionByName(cents_rows)
+    """Events -> HINCRBY command rows, one per (type, hour bucket, field):
+    ``n`` (event count) and ``cents`` (value sum in integer cents — exact,
+    mergeable, no float drift in Redis)."""
+    return _aggregate(events, ("n", "cents")).withColumnRenamed("member", "field")
 
 
 def ranking_commands(events: DataFrame) -> DataFrame:
     """Events -> ZINCRBY command rows for per-type user rankings."""
-    agg = events.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("delta")
-    )
-    # NULL user_id -> '-' sentinel member (redis members cannot be NULL)
-    return agg.select(
-        F.lit("ZINCRBY").alias("cmd"),
-        F.concat_ws(":", F.lit("top_users"), F.col("event_type")).alias("key"),
-        F.coalesce(F.col("user_id").cast("string"), F.lit("-")).alias("member"),
-        "delta",
-    )
+    return _aggregate(events, ("top_users",))
 
 
 def path_ranking_commands(events: DataFrame) -> DataFrame:
     """Events -> ZINCRBY command rows for per-(type, day) top PAGES — the
     reference's actual ranking zset content (top paths/referrers, not just
-    users). The fixture events carry no URL, so one is synthesized from the
-    JSON payload; ``parse_url`` is the real JVM-side extraction a deployment
-    would run on the referrer/page field."""
-    url = F.concat(
-        F.lit("https://shop.example.com/p/"),
-        F.get_json_object("props", "$.k"),
-    )
-    path = F.parse_url(url, F.lit("PATH"))
-    # NULL ts -> explicit '-' day segment (concat_ws drops NULL segments)
-    day = F.coalesce(F.date_format("ts", "yyyy:MM:dd"), F.lit("-"))
-    agg = events.groupBy(
-        F.concat_ws(":", F.lit("top_paths"), F.col("event_type"), day).alias("key"),
-        # NULL/unparseable props -> '-' sentinel member
-        F.coalesce(path, F.lit("-")).alias("member"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("delta"))
-    return agg.select(F.lit("ZINCRBY").alias("cmd"), "key", "member", "delta")
+    users)."""
+    return _aggregate(events, ("top_paths",))
 
 
 def unique_commands(events: DataFrame) -> DataFrame:
@@ -133,22 +159,7 @@ def unique_commands(events: DataFrame) -> DataFrame:
     bucket|, not |events|. (The HLL variant would be PFADD with identical
     shape.)
     """
-    day_key = F.concat_ws(
-        ":",
-        F.lit("uniq"),
-        F.col("event_type"),
-        # NULL ts -> explicit '-' day segment (concat_ws drops NULLs)
-        F.coalesce(F.date_format("ts", "yyyy:MM:dd"), F.lit("-")),
-    )
-    return (
-        events.select(
-            F.lit("SADD").alias("cmd"),
-            day_key.alias("key"),
-            # NULL user_id -> '-' sentinel member
-            F.coalesce(F.col("user_id").cast("string"), F.lit("-")).alias("member"),
-        )
-        .distinct()
-    )
+    return _aggregate(events, ("uniq",)).drop("delta")
 
 
 class Pipeline:
@@ -281,19 +292,24 @@ def client_factory_from_env(default_factory=FakeRedis):
 
 
 def _stage_field(r) -> tuple[str, str]:
-    """Encode one command row as an idempotent staging (field, value) pair.
+    """Encode one (cmd, key, member, delta) row as an idempotent staging
+    (field, value) pair.
 
-    Post-aggregation each (cmd, key, field/member) identity occurs exactly
-    once per batch, so HSET overwrite makes partition retries no-ops. '|'
-    never appears in keys (':'-joined) so the encoding is unambiguous.
+    Post-aggregation each (cmd, key, member) identity occurs exactly once
+    per batch, so HSET overwrite makes partition retries no-ops. '|' never
+    appears in keys (':'-joined) so the encoding is unambiguous.
     """
-    if r.cmd == "HINCRBY":
-        return f"HINCRBY|{r.key}|{r.field}", str(int(r.delta))
-    if r.cmd == "ZINCRBY":
-        return f"ZINCRBY|{r.key}|{r.member}", str(int(r.delta))
-    if r.cmd == "SADD":
-        return f"SADD|{r.key}|{r.member}", "1"
-    raise ValueError(f"unknown command {r.cmd!r}")
+    if r.cmd not in ("HINCRBY", "ZINCRBY", "SADD"):
+        raise ValueError(f"unknown command {r.cmd!r}")
+    value = "1" if r.cmd == "SADD" else str(int(r.delta))
+    return f"{r.cmd}|{r.key}|{r.member}", value
+
+
+def _close(client) -> None:
+    """Close a client that holds a connection (FakeRedis holds none)."""
+    close = getattr(client, "close", None)
+    if close is not None:
+        close()
 
 
 def stage_writer(client_factory, stage_key: str):
@@ -302,14 +318,17 @@ def stage_writer(client_factory, stage_key: str):
 
     def _write(rows) -> None:
         client = client_factory()
-        pipe = client.pipeline(transaction=False)
-        n = 0
-        for r in rows:
-            field, value = _stage_field(r)
-            pipe.hset(stage_key, field, value)
-            n += 1
-        if n:
-            pipe.execute()
+        try:
+            pipe = client.pipeline(transaction=False)
+            n = 0
+            for r in rows:
+                field, value = _stage_field(r)
+                pipe.hset(stage_key, field, value)
+                n += 1
+            if n:
+                pipe.execute()
+        finally:
+            _close(client)
 
     return _write
 
@@ -358,7 +377,9 @@ class RedisCounterSink:
     ``foreachPartition`` on executors (requires a client whose writes are
     visible across processes — any real Redis) or driver-side over
     ``toLocalIterator`` (FakeRedis, whose state is process-local); default
-    auto-detects.
+    auto-detects. Every client the factory returns is closed (if it has a
+    ``close``) once its staging partition or its commit is done, so the
+    factory should hand out a connection of its own per call.
     """
 
     def __init__(
@@ -370,24 +391,22 @@ class RedisCounterSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         client = self._factory()
-        marker = f"{self._ns}:batch:{batch_id}"
-        if client.get(marker) is not None:
-            return  # batch fully committed by a previous attempt
-        stage_key = f"{self._ns}:stage:{batch_id}"
-        distributed = self._distributed
-        if distributed is None:
-            distributed = not isinstance(client, FakeRedis)
-        writer = stage_writer(self._factory, stage_key)
-        for cdf in (
-            counter_commands(batch_df),
-            ranking_commands(batch_df),
-            path_ranking_commands(batch_df),
-            unique_commands(batch_df),
-        ):
+        try:
+            marker = f"{self._ns}:batch:{batch_id}"
+            if client.get(marker) is not None:
+                return  # batch fully committed by a previous attempt
+            stage_key = f"{self._ns}:stage:{batch_id}"
+            distributed = self._distributed
+            if distributed is None:
+                distributed = not isinstance(client, FakeRedis)
+            writer = stage_writer(self._factory, stage_key)
+            cmds = batch_commands(batch_df)
             if distributed:
                 # production path: stage from executors, pipeline/partition
-                cdf.foreachPartition(writer)
+                cmds.foreachPartition(writer)
             else:
                 # FakeRedis is process-local: same writer, driver-side
-                writer(cdf.toLocalIterator())
-        commit_staged(client, client.hgetall(stage_key), marker, stage_key)
+                writer(cmds.toLocalIterator())
+            commit_staged(client, client.hgetall(stage_key), marker, stage_key)
+        finally:
+            _close(client)

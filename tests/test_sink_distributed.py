@@ -293,3 +293,162 @@ def test_resp_large_pipeline_no_deadlock_no_quadratic():
         c.close()
     finally:
         srv.close()
+
+
+def _hostile_batch(spark):
+    """A small inline micro-batch with the rows the NULL policy exists for:
+    NULL ts, NULL user_id, a bucket whose every value is NULL, and props
+    with no ``$.k`` (missing key, NULL, malformed)."""
+    from datetime import datetime
+
+    t0 = datetime(2024, 3, 1, 10, 15)
+    t1 = datetime(2024, 3, 1, 11, 40)
+    t2 = datetime(2024, 3, 2, 9, 5)
+    rows = [
+        (1, t0, 7, "view", 1.25, '{"k": 3}'),
+        (2, t0, 7, "view", 2.5, '{"k": 3}'),
+        (3, t0, 8, "view", 0.1, '{"k": 4}'),
+        (4, t1, 8, "buy", 19.99, '{"k": 4}'),
+        (5, t2, 9, "buy", None, '{"k": 5}'),
+        (6, None, 7, "view", 3.0, '{"k": 3}'),  # NULL ts
+        (7, None, None, "buy", 4.0, '{"k": 6}'),  # NULL ts and user
+        (8, t1, None, "view", 0.5, '{"k": 3}'),  # NULL user
+        (9, t0, 10, "refund", None, '{"k": 1}'),  # all-NULL bucket
+        (10, t0, 11, "refund", None, '{"j": 1}'),  # ... and no $.k
+        (11, t1, 7, "view", 1.0, None),  # NULL props
+        (12, t2, 12, "view", 2.0, "{"),  # malformed props
+    ]
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+def test_sink_state_matches_public_builders(spark):
+    """The one-pass plan the sink stages must leave the same Redis state as
+    applying the rows of the four oracle-checked builders directly
+    (``snk_redis_hash`` / ``_zset`` / ``_paths`` / ``_uniq``)."""
+    from bootic_stats_aggregates_spark.sinks.redis_sink import (
+        counter_commands,
+        path_ranking_commands,
+        ranking_commands,
+        unique_commands,
+    )
+
+    batch = _hostile_batch(spark)
+    got = FakeRedis()
+    RedisCounterSink(lambda: got)(batch, batch_id=3)
+
+    want = FakeRedis()
+    for r in counter_commands(batch).collect():
+        want.hincrby(r.key, r.field, r.delta)
+    for build in (ranking_commands, path_ranking_commands):
+        for r in build(batch).collect():
+            want.zincrby(r.key, r.delta, r.member)
+    for r in unique_commands(batch).collect():
+        want.sadd(r.key, r.member)
+
+    assert dict(got.hashes) == dict(want.hashes)
+    assert dict(got.zsets) == dict(want.zsets)
+    assert dict(got.sets) == dict(want.sets)
+    # the hostile rows reached their sentinel buckets and members
+    assert got.hashes["stats:refund:2024:03:01:10"] == {"n": 2, "cents": 0}
+    assert got.hashes["stats:view:-"] == {"n": 1, "cents": 300}
+    assert got.zsets["top_users:buy"]["-"] == 1.0
+    assert got.zsets["top_paths:refund:2024:03:01"]["-"] == 1.0
+    assert got.zsets["top_paths:view:2024:03:02"]["-"] == 1.0
+    assert got.sets["uniq:buy:-"] == {"-"}
+
+
+def test_batch_commands_is_one_scan_one_shuffle(spark, tmp_path):
+    """Plan-shape guard for the sink: every command of a batch comes from
+    one scan of the batch and one Exchange, and one sink call is one Spark
+    job. Streaming runs each micro-batch with adaptive execution off (it
+    would submit the shuffle map stage as a job of its own), so the job
+    count is taken the same way."""
+    from bootic_stats_aggregates_spark.sinks.redis_sink import batch_commands
+
+    path = str(tmp_path / "batch")
+    table(spark, SF_DIR, "events").limit(2000).write.parquet(path)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        batch = spark.read.parquet(path)
+        plan = batch_commands(batch)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan") == 1, plan
+        assert plan.count("Exchange") == 1, plan
+
+        SpoolRedis = _make_spool_client(str(tmp_path))
+        client = SpoolRedis()
+        sink = RedisCounterSink(lambda: client, distributed=True)
+        sc = spark.sparkContext
+        sc.setJobGroup("sink-plan-shape", "one sink call")
+        try:
+            sink(batch, batch_id=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("sink-plan-shape")
+        assert len(jobs) == 1, jobs
+        assert client.get("bootic:batch:1") is not None
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_sink_closes_its_connections(spark, batch):
+    """Every RESP connection one distributed batch opens — the driver's and
+    one per staging partition — is closed when the sink call returns, not
+    left to the garbage collector. The factory keeps each client it hands
+    out (as a connection pool would), so only an explicit close ends a
+    connection."""
+    import threading
+    import time
+
+    from bootic_stats_aggregates_spark.sinks.resp import (
+        MiniRedisServer,
+        RespClient,
+        _Handler,
+    )
+
+    srv = MiniRedisServer()
+    lock = threading.Lock()
+    conns = {"opened": 0, "open": 0}
+
+    class Counting(_Handler):
+        def setup(self):
+            with lock:
+                conns["opened"] += 1
+                conns["open"] += 1
+
+        def finish(self):
+            with lock:
+                conns["open"] -= 1
+
+    class Pool:
+        """Keeps every client it opens; ships to executors empty."""
+
+        def __init__(self, url):
+            self.url, self.held = url, []
+
+        def __call__(self):
+            self.held.append(RespClient.from_url(self.url))
+            return self.held[-1]
+
+        def __getstate__(self):
+            return {"url": self.url, "held": []}
+
+    srv._tcp.RequestHandlerClass = Counting
+    try:
+        pool = Pool(srv.url)
+        RedisCounterSink(pool, distributed=True)(batch, batch_id=5)
+        deadline = time.monotonic() + 10
+        while conns["open"] and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert conns["opened"] >= 2, conns  # driver + >= 1 partition
+        assert conns["open"] == 0, conns
+        assert all(c._sock.fileno() == -1 for c in pool.held)
+        with srv.lock:
+            assert srv.kv.get("bootic:batch:5") is not None
+    finally:
+        srv.close()

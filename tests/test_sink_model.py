@@ -121,7 +121,7 @@ def test_two_phase_commit_exactly_once(batches, crash_ids):
     (The r1 marker-BEFORE-apply ordering failed this: a crash mid-apply
     left the marker set and the retry skipped the batch entirely.)"""
     r = FakeRedis()
-    rows_of = lambda key, delta: [_Row(cmd="HINCRBY", key=key, field="n", delta=delta)]
+    rows_of = lambda key, delta: [_Row(cmd="HINCRBY", key=key, member="n", delta=delta)]
     for batch_id, (key, delta) in enumerate(batches):
         _stage_and_maybe_commit(
             r, batch_id, rows_of(key, delta), crash_before_commit=batch_id in crash_ids
