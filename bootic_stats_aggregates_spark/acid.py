@@ -205,6 +205,16 @@ class FileEntry:
     #: thereby re-qualifies every file without touching any of them.
     cluster_epoch: Optional[int] = None
 
+    @classmethod
+    def from_action(cls, a: dict) -> "FileEntry":
+        """The live entry an ``add`` action (or checkpoint file record)
+        describes."""
+        return cls(
+            a["file"], a["rows"], a.get("stats", {}), a.get("dv"),
+            a.get("dv_rows", 0), a.get("base_row_id"),
+            a.get("partition", {}), a.get("cluster_epoch"),
+        )
+
     def may_contain(self, col: str, lo: Any, hi: Any) -> bool:
         """Conservative range-overlap test: True unless the file's stats
         PROVE no row with ``col`` in [lo, hi] exists (missing stats, or a
@@ -616,13 +626,7 @@ class MiniLogTable:
             with open(self._ckpt_path(ckpt_v)) as fh:
                 state = json.load(fh)
             live = {
-                f["file"]: FileEntry(
-                    f["file"], f["rows"], f.get("stats", {}),
-                    f.get("dv"), f.get("dv_rows", 0),
-                    f.get("base_row_id"), f.get("partition", {}),
-                    f.get("cluster_epoch"),
-                )
-                for f in state["files"]
+                f["file"]: FileEntry.from_action(f) for f in state["files"]
             }
             txns = dict(state.get("txns", {}))
             schema = state.get("schema")
@@ -649,13 +653,7 @@ class MiniLogTable:
                 )
             for act in entry["actions"]:
                 if act["type"] == "add":
-                    live[act["file"]] = FileEntry(
-                        act["file"], act["rows"], act.get("stats", {}),
-                        act.get("dv"), act.get("dv_rows", 0),
-                        act.get("base_row_id"),
-                        act.get("partition", {}),
-                        act.get("cluster_epoch"),
-                    )
+                    live[act["file"]] = FileEntry.from_action(act)
                 elif act["type"] == "remove":
                     live.pop(act["file"], None)
                 elif act["type"] == "metaData":
@@ -1781,15 +1779,10 @@ class MiniLogTable:
         if not snap.files:
             return []
         tagged = self._tagged_read(snap.files)
-        cols = []
-        for c in snap.schema or []:
-            p = _phys(c)
-            cols.append(
-                F.col(p).cast(c["type"]).alias(c["name"])
-                if p in tagged.columns
-                else F.lit(None).cast(c["type"]).alias(c["name"])
-            )
-        proj = tagged.select(*cols, F.col("__dv_file"))
+        proj = tagged.select(
+            *_log_columns(tagged.columns, snap.schema or []),
+            F.col("__dv_file"),
+        )
         if alias:
             proj = proj.alias(alias)
         hits = {
@@ -2009,28 +2002,16 @@ class MiniLogTable:
         # the positional columns kept, because the SAME matched rows
         # feed both the mask (positions) and the replacements (values)
         tagged = self._tagged_read(touched)
-        bases = self.spark.createDataFrame(
-            [(os.path.basename(e.file), e.base_row_id) for e in touched],
-            "__dv_file STRING, __base BIGINT",
+        bases = {os.path.basename(e.file): e.base_row_id for e in touched}
+        rid = _row_id(
+            tagged.columns,
+            _file_lookup(bases, "bigint")[F.col("__dv_file")],
         )
-        tagged = tagged.join(F.broadcast(bases), "__dv_file", "left")
-        rid = F.col("__base") + F.col("__dv_pos")
-        if ROW_ID_COL in tagged.columns:
-            rid = F.coalesce(F.col(ROW_ID_COL), rid)
-        tagged = tagged.withColumn("__rid", rid.cast("long"))
-        cols = []
-        for c in snap.schema:
-            p = _phys(c)
-            cols.append(
-                F.col(p).cast(c["type"]).alias(c["name"])
-                if p in tagged.columns
-                else F.lit(None).cast(c["type"]).alias(c["name"])
-            )
         proj = tagged.select(
-            *cols,
+            *_log_columns(tagged.columns, snap.schema),
             F.col("__dv_file").alias("__file"),
             F.col("__dv_pos").alias("__pos"),
-            F.col("__rid"),
+            rid.alias("__rid"),
         )
         if alias:
             proj = proj.alias(alias)
@@ -2156,16 +2137,8 @@ class MiniLogTable:
         if not touched:
             return {"version": snap.version, "dv_files": 0, "dv_rows": 0}
         tagged = self._tagged_read(touched)
-        cols = []
-        for c in snap.schema:
-            p = _phys(c)
-            cols.append(
-                F.col(p).cast(c["type"]).alias(c["name"])
-                if p in tagged.columns
-                else F.lit(None).cast(c["type"]).alias(c["name"])
-            )
         proj = tagged.select(
-            *cols,
+            *_log_columns(tagged.columns, snap.schema),
             F.col("__dv_file").alias("file"),
             F.col("__dv_pos").alias("row_index"),
         )
@@ -2223,19 +2196,18 @@ class MiniLogTable:
         )
         # carry the prior vectors of the swapped entries forward: one
         # sidecar per commit holds each file's FULL deletion set
-        for dv in sorted({e.dv for e in swap if e.dv}):
-            holders = [os.path.basename(e.file) for e in swap if e.dv == dv]
+        if any(e.dv for e in swap):
             mask = mask.unionByName(
-                self.spark.read.parquet(os.path.join(self.path, dv))
-                .filter(F.col("file").isin(holders))
-                .select("file", "row_index")
+                self._masked_rows(swap).select(
+                    F.col("__dv_file").alias("file"),
+                    F.col("__dv_pos").alias("row_index"),
+                )
             )
         sidecar = self._write_dv_sidecar(mask)
         totals = {
             r["file"]: r["n"]
-            for r in self.spark.read.parquet(
-                os.path.join(self.path, sidecar)
-            )
+            for r in self.spark.read.schema(_DV_SCHEMA)
+            .parquet(os.path.join(self.path, sidecar))
             .groupBy("file")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -2720,27 +2692,13 @@ class MiniLogTable:
         return list(prune)
 
     def _project(self, df: DataFrame, schema: Optional[list[dict]]) -> DataFrame:
-        """Conform a raw parquet read to the log schema: resolve each
-        logical column through its PHYSICAL name (column mapping — a
-        renamed column reads the original parquet column, a dropped
-        column is simply not selected), null-fill columns a
-        pre-evolution file lacks, in log column order."""
+        """Conform a raw parquet read to the log schema (see
+        :func:`_log_columns`)."""
         if not schema:
             # pre-schema table: raw file columns, minus the hidden
             # materialized row-id column a rewrite may have added
             return df.drop(ROW_ID_COL)
-        cols = []
-        for c in schema:
-            p = _phys(c)
-            if p in df.columns:
-                # cast to the LOG's declared type: partition columns
-                # come back through directory-name discovery (int where
-                # the log says bigint) — the snapshot schema, not the
-                # inference, is the contract
-                cols.append(F.col(p).cast(c["type"]).alias(c["name"]))
-            else:
-                cols.append(F.lit(None).cast(c["type"]).alias(c["name"]))
-        return df.select(*cols)
+        return df.select(*_log_columns(df.columns, schema))
 
     def _read_files(
         self, files: list[str], schema: Optional[list[dict]]
@@ -2756,6 +2714,58 @@ class MiniLogTable:
         )
         return self._project(df, schema)
 
+    def _scan(self, files: list[str]) -> DataFrame:
+        """ONE multi-path read of ``files`` (each listed once) with every
+        row's physical address exposed as (__dv_file, __dv_pos): the
+        parquet ``_metadata`` file basename and row position."""
+        raw = (
+            self.spark.read.option("mergeSchema", "true")
+            .option("basePath", self.path)
+            .parquet(*[os.path.join(self.path, f) for f in files])
+        )
+        return raw.select(
+            *[F.col(c) for c in raw.columns],
+            F.col("_metadata.file_name").alias("__dv_file"),
+            F.col("_metadata.row_index").alias("__dv_pos"),
+        )
+
+    def _dv_rows(self, dvs) -> DataFrame:
+        """Every (__dv_file, __dv_pos) the sidecars ``dvs`` mask, tagged
+        ``__dv`` with the sidecar's basename: ONE read under the
+        sidecar's fixed schema, so it schedules no schema-inference
+        job. Sidecars key rows by ``_metadata.file_name`` — the data
+        file's BASENAME (unique: fresh UUIDs)."""
+        paths = [os.path.join(self.path, dv) for dv in sorted(set(dvs))]
+        return (
+            self.spark.read.schema(_DV_SCHEMA)
+            .parquet(*paths)
+            .select(
+                F.col("_metadata.file_name").alias("__dv"),
+                F.col("file").alias("__dv_file"),
+                F.col("row_index").alias("__dv_pos"),
+            )
+        )
+
+    def _masked_rows(self, entries: list[FileEntry]) -> DataFrame:
+        """(__dv_file, __dv_pos) of every row the entries' deletion
+        vectors mask. A sidecar may cover several files from its commit,
+        and a later rewrite may have dropped the DV from SOME of them,
+        so a sidecar's rows count only for the files still referencing
+        it."""
+        current = {
+            os.path.basename(e.file): os.path.basename(e.dv)
+            for e in entries
+            if e.dv
+        }
+        return (
+            self._dv_rows({e.dv for e in entries if e.dv})
+            .filter(
+                F.col("__dv")
+                == _file_lookup(current, "string")[F.col("__dv_file")]
+            )
+            .drop("__dv")
+        )
+
     def _tagged_read(self, entries: list[FileEntry]) -> DataFrame:
         """LIVE rows of ``entries`` with their physical address exposed
         as (__dv_file, __dv_pos): parquet ``_metadata`` row positions,
@@ -2763,45 +2773,14 @@ class MiniLogTable:
         read side of the merge-on-read protocol — both the table read
         and the next DV delete (which must address only still-live
         rows) build on this."""
-        paths = [os.path.join(self.path, e.file) for e in entries]
-        raw = (
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", self.path)
-            .parquet(*paths)
+        tagged = self._scan([e.file for e in entries])
+        if not any(e.dv for e in entries):
+            return tagged
+        return tagged.join(
+            F.broadcast(self._masked_rows(entries)),
+            ["__dv_file", "__dv_pos"],
+            "left_anti",
         )
-        tagged = raw.select(
-            *[F.col(c) for c in raw.columns],
-            F.col("_metadata.file_name").alias("__dv_file"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        )
-        # A sidecar may cover several files from its commit, and a later
-        # rewrite may have dropped the DV from SOME of them — so each
-        # sidecar's mask applies only to the files still referencing it.
-        dv_entries = [e for e in entries if e.dv]
-        masks = None
-        for dv in sorted({e.dv for e in dv_entries}):
-            # sidecars key rows by _metadata.file_name — the BASENAME
-            # (unique: fresh UUIDs) — while entry paths may carry a
-            # partition subdir
-            holders = [
-                os.path.basename(e.file)
-                for e in dv_entries
-                if e.dv == dv
-            ]
-            m = (
-                self.spark.read.parquet(os.path.join(self.path, dv))
-                .filter(F.col("file").isin(holders))
-                .select(
-                    F.col("file").alias("__dv_file"),
-                    F.col("row_index").alias("__dv_pos"),
-                )
-            )
-            masks = m if masks is None else masks.unionByName(m)
-        if masks is not None:
-            tagged = tagged.join(
-                F.broadcast(masks), ["__dv_file", "__dv_pos"], "left_anti"
-            )
-        return tagged
 
     def _read_entries(
         self, entries: list[FileEntry], schema: Optional[list[dict]]
@@ -2831,35 +2810,23 @@ class MiniLogTable:
         (surviving rows keep their positions, so positional defaults
         stay correct). Rows of pre-tracking files get NULL.
 
-        Plan shape: the per-file base lookup is ONE broadcast of an
-        O(#files) two-column frame joined on the scan's
-        ``_metadata.file_name`` — no shuffle, no row-scaled driver
-        state; everything else is the normal vectorized scan."""
+        The per-file base comes from an in-plan literal lookup on the
+        scan's ``_metadata.file_name`` (:func:`_file_lookup`): no
+        join, no job, no Python worker."""
         tagged = self._tagged_read(entries)
-        bases = self.spark.createDataFrame(
-            [(os.path.basename(e.file), e.base_row_id) for e in entries],
-            "__dv_file STRING, __base BIGINT",
+        bases = {os.path.basename(e.file): e.base_row_id for e in entries}
+        rid = _row_id(
+            tagged.columns,
+            _file_lookup(bases, "bigint")[F.col("__dv_file")],
         )
-        tagged = tagged.join(F.broadcast(bases), "__dv_file", "left")
-        default = F.col("__base") + F.col("__dv_pos")
-        rid = (
-            F.coalesce(F.col(ROW_ID_COL), default)
-            if ROW_ID_COL in tagged.columns
-            else default
-        )
-        tagged = tagged.withColumn(ROW_ID_COL, rid.cast("long")).drop(
-            "__dv_file", "__dv_pos", "__base"
+        tagged = tagged.withColumn(ROW_ID_COL, rid).drop(
+            "__dv_file", "__dv_pos"
         )
         if not schema:
             return tagged
-        cols = []
-        for c in schema:
-            p = _phys(c)
-            if p in tagged.columns:
-                cols.append(F.col(p).cast(c["type"]).alias(c["name"]))
-            else:
-                cols.append(F.lit(None).cast(c["type"]).alias(c["name"]))
-        return tagged.select(*cols, F.col(ROW_ID_COL))
+        return tagged.select(
+            *_log_columns(tagged.columns, schema), F.col(ROW_ID_COL)
+        )
 
     def read_with_row_ids(self, version: Optional[int] = None) -> DataFrame:
         """Snapshot read with each row's stable id exposed as
@@ -3113,15 +3080,7 @@ class MiniLogTable:
             else self.snapshot(from_version)
         )
         snap_b = self.snapshot(to_version)
-        # entry identity = (file, dv): a DV delete re-adds the same data
-        # file with a new vector — the old (file, None) identity reads
-        # the full file, the new (file, dv) identity reads it masked,
-        # and the bag difference yields exactly the deleted rows.
-        a_ids = {(f.file, f.dv): f for f in snap_a.files}
-        b_ids = {(f.file, f.dv): f for f in snap_b.files}
-        _k = lambda k: (k[0], k[1] or "")  # noqa: E731 - None-safe sort
-        added = [b_ids[k] for k in sorted(set(b_ids) - set(a_ids), key=_k)]
-        removed = [a_ids[k] for k in sorted(set(a_ids) - set(b_ids), key=_k)]
+        added, removed = _entry_diff(snap_a.files, snap_b.files)
         schema = snap_b.schema
 
         def rd(entries: list[FileEntry]) -> DataFrame:
@@ -3160,9 +3119,10 @@ class MiniLogTable:
         rewrite copied UNCHANGED cancel (same id, same values) — an
         OPTIMIZE feeds nothing, exactly like the bag-difference feed.
 
-        Scale: reads only the two snapshots' differing files — O(commit
-        churn) — and the id-keyed full-outer join shuffles only those
-        rows; ids are unique per snapshot so the join never fans out.
+        The one-pair case of :meth:`changes_with_ids_by_commit`'s
+        kernel: reads only the two snapshots' differing files — O(churn)
+        — and the id-keyed full-outer join shuffles only those rows;
+        ids are unique per snapshot so the join never fans out.
 
         Raises :class:`ValueError` when a differing file predates row
         tracking (no id range): the caller falls back to
@@ -3173,66 +3133,149 @@ class MiniLogTable:
             else self.snapshot(from_version)
         )
         snap_b = self.snapshot(to_version)
-        a_ids = {(f.file, f.dv): f for f in snap_a.files}
-        b_ids = {(f.file, f.dv): f for f in snap_b.files}
-        _k = lambda k: (k[0], k[1] or "")  # noqa: E731
-        added = [b_ids[k] for k in sorted(set(b_ids) - set(a_ids), key=_k)]
-        removed = [a_ids[k] for k in sorted(set(a_ids) - set(b_ids), key=_k)]
-        untracked = [
-            e.file for e in added + removed if e.base_row_id is None
-        ]
+        added, removed = _entry_diff(snap_a.files, snap_b.files)
+        return self._id_feed(
+            [(snap_b.version, removed, added)], snap_b.schema
+        ).drop("_commit_version")
+
+    def changes_with_ids_by_commit(
+        self, from_version: int, to_version: Optional[int] = None
+    ) -> DataFrame:
+        """Every commit's row-tracked feed over ``(from_version,
+        to_version]`` in ONE plan: for each commit v, the rows of
+        ``changes_with_ids(v - 1, v)`` plus ``_commit_version = v`` —
+        the shape a ``readChangeFeed`` + ``withRowIds`` stream emits,
+        and one of :func:`apply_changes`' documented inputs. Like
+        :meth:`changes`, every commit projects through the range's TO
+        schema (a feed spanning an ADD COLUMN null-fills older rows).
+
+        The log is folded once on the driver into each commit's
+        (removed, added) entries; the touched files are then read in
+        one scan, so the cost is O(total churn) rows and a fixed number
+        of jobs whatever the commit count. Raises like
+        :meth:`changes_with_ids`."""
+        versions = set(self._versions())
+        to = self.version if to_version is None else to_version
+        base = (
+            Snapshot(-1, [], {})
+            if from_version < 0
+            else self.snapshot(from_version)
+        )
+        live = {f.file: f for f in base.files}
+        schema = base.schema
+        commits = []
+        for v in range(max(from_version, -1) + 1, to + 1):
+            if v not in versions:
+                raise NoSuchVersion(f"version {v} not in log")
+            before: dict[str, Optional[FileEntry]] = {}
+            for act in self._read_entry(v)["actions"]:
+                if act["type"] in ("add", "remove"):
+                    before.setdefault(act["file"], live.get(act["file"]))
+                    if act["type"] == "add":
+                        live[act["file"]] = FileEntry.from_action(act)
+                    else:
+                        live.pop(act["file"], None)
+                elif act["type"] == "metaData":
+                    schema = act["schema"]  # latest metaData wins
+            added, removed = _entry_diff(
+                [e for e in before.values() if e is not None],
+                [live[f] for f in before if f in live],
+            )
+            commits.append((v, removed, added))
+        return self._id_feed(commits, schema)
+
+    def _id_feed(
+        self,
+        commits: list[tuple[int, list[FileEntry], list[FileEntry]]],
+        schema: Optional[list[dict]],
+    ) -> DataFrame:
+        """The row-tracked feed kernel: one (removed, added) entry diff
+        per ``_commit_version``, all projected through ``schema``.
+
+        Plan: the distinct touched files are read in ONE multi-path
+        scan; each row is exploded through an in-plan literal lookup
+        ``file -> [(dv, commit, side, base_row_id)]`` (one slot per
+        commit diff the file appears in), DV-masked per (sidecar, file,
+        position) with one sidecar read, and the two sides meet in ONE
+        full-outer join on (_commit_version, _row_id)."""
+        touched = [e for _, rm, add in commits for e in rm + add]
+        untracked = [e.file for e in touched if e.base_row_id is None]
         if untracked:
             raise ValueError(
                 "changes_with_ids: files predate row tracking (no id "
                 f"range): {sorted(untracked)} — use changes() for the "
                 "unlinked delete+insert feed"
             )
-        schema = snap_b.schema
         if not schema:
             raise ValueError(
                 "changes_with_ids needs a log-tracked table schema"
             )
         names = [c["name"] for c in schema]
-
-        def rd(entries: list[FileEntry]) -> DataFrame:
-            if entries:
-                return self._read_entries_with_ids(
-                    entries, schema
-                ).withColumnRenamed(ROW_ID_COL, "_row_id")
-            ddl = ", ".join(
-                f"`{c['name']}` {c['type']}" for c in schema
-            )
+        if not touched:
+            ddl = ", ".join(f"`{c['name']}` {c['type']}" for c in schema)
             return self.spark.createDataFrame(
-                [], ddl + ", `_row_id` bigint"
+                [],
+                ddl + ", `_row_id` bigint, `_change_type` string, "
+                "`_commit_version` bigint",
             )
-
-        old = rd(removed).withColumn("__o", F.lit(True))
-        new = rd(added).withColumn("__n", F.lit(True))
-        j = old.alias("o").join(new.alias("n"), ["_row_id"], "full_outer")
+        slots: dict[str, list[dict]] = {}
+        for v, removed, added in commits:
+            for new, entries in ((False, removed), (True, added)):
+                for e in entries:
+                    slots.setdefault(os.path.basename(e.file), []).append(
+                        {
+                            "dv": e.dv and os.path.basename(e.dv),
+                            "v": v,
+                            "new": new,
+                            "base": e.base_row_id,
+                        }
+                    )
+        raw = self._scan(sorted({e.file for e in touched}))
+        lookup = _file_lookup(
+            slots, "array<struct<dv:string,v:bigint,new:boolean,base:bigint>>"
+        )
+        rows = raw.withColumn(
+            "__s", F.explode(lookup[F.col("__dv_file")])
+        ).withColumn("__dv", F.col("__s.dv"))
+        dvs = {e.dv for e in touched if e.dv}
+        if dvs:
+            rows = rows.join(
+                F.broadcast(self._dv_rows(dvs)),
+                ["__dv", "__dv_file", "__dv_pos"],
+                "left_anti",
+            )
+        rows = rows.select(
+            *_log_columns(raw.columns, schema),
+            _row_id(raw.columns, F.col("__s.base")).alias("_row_id"),
+            F.col("__s.v").alias("_commit_version"),
+            F.col("__s.new").alias("__new"),
+        )
+        old = rows.filter(~F.col("__new")).withColumn("__o", F.lit(True))
+        new = rows.filter(F.col("__new")).withColumn("__n", F.lit(True))
+        j = old.alias("o").join(
+            new.alias("n"), ["_commit_version", "_row_id"], "full_outer"
+        )
         same = F.struct(
             *[F.col(f"o.{c}") for c in names]
         ).eqNullSafe(F.struct(*[F.col(f"n.{c}") for c in names]))
         o_cols = [F.col(f"o.{c}").alias(c) for c in names]
         n_cols = [F.col(f"n.{c}").alias(c) for c in names]
         both = F.col("o.__o").isNotNull() & F.col("n.__n").isNotNull()
-        inserts = j.filter(F.col("o.__o").isNull()).select(
-            *n_cols, "_row_id", F.lit("insert").alias("_change_type")
+
+        def emit(where: F.Column, cols: list, change: str) -> DataFrame:
+            return j.filter(where).select(
+                *cols,
+                "_row_id",
+                F.lit(change).alias("_change_type"),
+                "_commit_version",
+            )
+
+        return (
+            emit(F.col("o.__o").isNull(), n_cols, "insert")
+            .unionAll(emit(F.col("n.__n").isNull(), o_cols, "delete"))
+            .unionAll(emit(both & ~same, o_cols, "update_preimage"))
+            .unionAll(emit(both & ~same, n_cols, "update_postimage"))
         )
-        deletes = j.filter(F.col("n.__n").isNull()).select(
-            *o_cols, "_row_id", F.lit("delete").alias("_change_type")
-        )
-        upd = j.filter(both & ~same)
-        pre = upd.select(
-            *o_cols,
-            "_row_id",
-            F.lit("update_preimage").alias("_change_type"),
-        )
-        post = upd.select(
-            *n_cols,
-            "_row_id",
-            F.lit("update_postimage").alias("_change_type"),
-        )
-        return inserts.unionAll(deletes).unionAll(pre).unionAll(post)
 
     # ----------------------------------------------------------- optimize
     def detail(self) -> dict:
@@ -4178,6 +4221,69 @@ def apply_changes(state: DataFrame, feed: DataFrame) -> DataFrame:
         state.join(gone, "_row_id", "left_anti")
         .unionByName(arriving.select(*state.columns))
         .select(*state.columns)
+    )
+
+
+#: Schema of a deletion-vector sidecar (see MiniLogTable._write_dv_sidecar).
+_DV_SCHEMA = "file STRING, row_index BIGINT"
+
+
+def _file_lookup(mapping: dict, value_type: str) -> F.Column:
+    """An in-plan literal ``map<string, value_type>`` keyed by data file
+    basename, built from ONE JSON string: the optimizer folds it into a
+    constant, so a per-file lookup costs no join, no job and no Python
+    worker, and the plan carries O(#files) entries whatever the row
+    count."""
+    return F.from_json(
+        F.lit(json.dumps(mapping)), f"map<string,{value_type}>"
+    )
+
+
+def _row_id(columns: list[str], base: F.Column) -> F.Column:
+    """A row's stable id: its file's materialized ``__row_id`` when the
+    file has one, else ``base`` + its parquet position."""
+    default = base + F.col("__dv_pos")
+    rid = (
+        F.coalesce(F.col(ROW_ID_COL), default)
+        if ROW_ID_COL in columns
+        else default
+    )
+    return rid.cast("long")
+
+
+def _log_columns(columns: list[str], schema: list[dict]) -> list[F.Column]:
+    """Conform raw parquet columns to the log schema: resolve each
+    logical column through its PHYSICAL name (column mapping — a
+    renamed column reads the original parquet column, a dropped column
+    is simply not selected) and null-fill columns a pre-evolution file
+    lacks, in log column order. Each column is cast to the LOG's
+    declared type: partition columns come back through directory-name
+    discovery (int where the log says bigint) — the snapshot schema,
+    not the inference, is the contract."""
+    out = []
+    for c in schema:
+        p = _phys(c)
+        if p in columns:
+            out.append(F.col(p).cast(c["type"]).alias(c["name"]))
+        else:
+            out.append(F.lit(None).cast(c["type"]).alias(c["name"]))
+    return out
+
+
+def _entry_diff(
+    a: list[FileEntry], b: list[FileEntry]
+) -> tuple[list[FileEntry], list[FileEntry]]:
+    """(added, removed) entries going from file set ``a`` to ``b``.
+    Entry identity is (file, dv): a DV delete re-adds the same data
+    file with a new vector — the old (file, None) identity reads the
+    full file, the new (file, dv) identity reads it masked, and the
+    difference of the two reads yields exactly the deleted rows."""
+    a_ids = {(f.file, f.dv): f for f in a}
+    b_ids = {(f.file, f.dv): f for f in b}
+    _k = lambda k: (k[0], k[1] or "")  # noqa: E731 - None-safe sort
+    return (
+        [b_ids[k] for k in sorted(b_ids.keys() - a_ids.keys(), key=_k)],
+        [a_ids[k] for k in sorted(a_ids.keys() - b_ids.keys(), key=_k)],
     )
 
 

@@ -2859,8 +2859,8 @@ def tx_apply_changes_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert/update_postimage rows enter — so an update REPLACES its row
     under the stable id instead of the guess-which-delete-pairs-with-
     which-insert reconstruction an unlinked feed forces. The fold is
-    verified against the direct recompute (read_with_row_ids) after
-    every commit: MERGE clause mix, deletion-vector delete, and an
+    verified against the direct recompute (read_with_row_ids) over a
+    history of a MERGE clause mix, a deletion-vector delete, and an
     OPTIMIZE whose feed must net nothing. At 100 TB the consumer pays
     O(churn) per sync, never O(table)."""
     tbl, ready = _staged(spark, sf_dir, "apply_keyed")
@@ -2889,45 +2889,15 @@ def tx_apply_changes_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _mark_ready(tbl, sf_dir)
     from ..acid import apply_changes
 
-    # bootstrap at the first append, then fold every later commit's
-    # update-linked feed — the maintained state never rereads the
-    # table (feeds 2.. include the second append's inserts).
-    #
-    # r14 (VERDICT r13 task 6, guide §3.3 plan size): apply_changes runs
-    # ONCE over the balanced-union concatenation of the per-commit feeds
-    # instead of once per commit. The per-commit chain built an
-    # anti-join + union + net-agg PER VERSION — O(#commits) sequential
-    # set-op depth, 80 exchanges and 19 s of planning/staging at 6
-    # commits — while the concatenated batch is apply_changes' other
-    # DOCUMENTED input shape (identical (row, id) pairs net-cancel by
-    # change sign before the single anti-join; equality with the
-    # per-commit fold is pinned by stream_apply_changes and the oracle
-    # here). The union tree keeps plan DEPTH at O(log #commits); each
-    # feed still reads only its commit's differing files. The unioned
-    # feed — O(total commit churn) rows, bounded by design — is then
-    # lineage-truncated with a LAZY localCheckpoint (the _ckpt_small /
-    # llm_cc_star recipe): without it every action on the maintained
-    # state (the sync proof's two exceptAll counts + the query itself)
-    # re-executed all N per-commit file-diff full-outer joins — the
-    # measured bulk of this op's build+noop cost. Recomputed per
-    # builder invocation from the commit log; nothing persists across
-    # builds (the op already sits in the laziness-gate exempt list:
-    # the sync proof counts at build).
-    state = tbl.read_with_row_ids(version=0)
-    feeds = [
-        tbl.changes_with_ids(v - 1, v) for v in range(1, tbl.version + 1)
-    ]
-    while len(feeds) > 1:
-        feeds = [
-            feeds[i].unionByName(feeds[i + 1])
-            if i + 1 < len(feeds)
-            else feeds[i]
-            for i in range(0, len(feeds), 2)
-        ]
-    if feeds:
-        state = apply_changes(
-            state, feeds[0].localCheckpoint(eager=False)
-        )
+    # bootstrap at the first append, then apply every later commit's
+    # update-linked feed at once: changes_with_ids_by_commit reads the
+    # whole range's touched files in one scan, and apply_changes nets
+    # identical (row, id) pairs across commits before its one anti-join
+    # (equal to the per-commit fold; stream_apply_changes pins that).
+    # The maintained state never rereads the table.
+    state = apply_changes(
+        tbl.read_with_row_ids(version=0), tbl.changes_with_ids_by_commit(0)
+    )
     direct = tbl.read_with_row_ids()
     # Bag-equality in ONE job (r14): the two directed exceptAll counts
     # each re-executed BOTH frames — two full passes over the direct

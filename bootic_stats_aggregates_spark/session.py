@@ -52,9 +52,8 @@ def session_cache(spark: SparkSession, namespace: str) -> dict[Any, Any]:
 _RUNTIME_CONF = {
     # Correctness: oracle comparison assumes UTC bucketing (FIXTURES.md rule 4).
     "spark.sql.session.timeZone": "UTC",
-    # spark.sql.adaptive.enabled is set in tune() — read per call, not at
-    # import time, so consumers that import the package before exporting
-    # SPARK_GRAFT_AQE still get the right mode (ADVICE r2).
+    # spark.sql.adaptive.enabled comes from SPARK_GRAFT_AQE, read per
+    # call in _runtime_confs().
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Dimension tables (region/nation/supplier/part/customer at test SFs) are
     # broadcast-sized; keep the planner eager about it.
@@ -81,38 +80,49 @@ def shuffle_partitions() -> int:
     return int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
 
 
-def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to a (possibly driver-owned) session. Idempotent."""
-    for k, v in _RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf may be locked down
-            pass
-    try:
-        # Let AQE re-plan at shuffle boundaries (coalesce tiny partitions,
-        # demote to broadcast, split skewed partitions) — our 100 TB safety
-        # net. Read per call like the other env knobs (ADVICE r2): an import
-        # that precedes the env export must not freeze the mode.
-        spark.conf.set(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("SPARK_GRAFT_AQE", "true"),
-        )
-    except Exception:  # pragma: no cover
-        pass
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions()))
-    except Exception:  # pragma: no cover
-        pass
+def _runtime_confs() -> dict[str, str]:
+    """Every conf :func:`tune` sets. The env knobs are read per call, not
+    at import time, so a consumer that imports the package before
+    exporting them still gets the right mode."""
+    confs = {
+        **_RUNTIME_CONF,
+        # Let AQE re-plan at shuffle boundaries (coalesce tiny
+        # partitions, demote to broadcast, split skewed partitions) —
+        # our 100 TB safety net.
+        "spark.sql.adaptive.enabled": os.environ.get(
+            "SPARK_GRAFT_AQE", "true"
+        ),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions()),
+    }
     # Input split size: 128 MB (cluster default) unless overridden — the
     # local bench shrinks it so a single-file fixture still scans on all
     # cores (bench.py sets 4 MB).
     mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
     if mpb:
+        confs["spark.sql.files.maxPartitionBytes"] = mpb
+    return confs
+
+
+def tune(spark: SparkSession) -> SparkSession:
+    """Apply runtime confs to a (possibly driver-owned) session. Idempotent.
+
+    A conf the session refuses (locked down by the driver, or an invalid
+    env override) does not fail the query: it is recorded with its error
+    text, and :func:`unapplied_confs` reports it."""
+    unapplied = session_cache(spark, "unapplied_confs")
+    unapplied.clear()
+    for key, value in _runtime_confs().items():
         try:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
-        except Exception:  # pragma: no cover
-            pass
+            spark.conf.set(key, value)
+        except Exception as e:  # noqa: BLE001 - recorded, not swallowed
+            unapplied[key] = f"{type(e).__name__}: {e}"
     return spark
+
+
+def unapplied_confs(spark: SparkSession) -> dict[str, str]:
+    """Conf key -> error text for each conf the latest :func:`tune` call
+    on ``spark`` could not set; empty when every conf applied."""
+    return dict(session_cache(spark, "unapplied_confs"))
 
 
 def get_spark(app_name: str = "bootic-stats-aggregates-spark") -> SparkSession:
