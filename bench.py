@@ -305,7 +305,7 @@ def main() -> None:
         os.environ.setdefault("SPARK_GRAFT_CKPT_DIR", "/dev/shm/bootic_ckpt")
 
     from bootic_stats_aggregates_spark.registry import all_queries
-    from bootic_stats_aggregates_spark.session import get_spark
+    from bootic_stats_aggregates_spark.session import get_spark, unapplied_confs
 
     # Host-load evidence (judge r4 item 2): co-tenant CPU spikes on this
     # host inflate the 25-60 ms headline queries by up to ~40%, and two
@@ -443,6 +443,9 @@ def main() -> None:
         "bench_protocol": _PROTOCOL,
         "steady_protocol": _STEADY_PROTOCOL,
         "steady_notes": _STEADY_NOTES,
+        # confs the session refused at the latest tune(): a driver-owned
+        # session may lock some down, and the timings above ran without them
+        "unapplied_confs": unapplied_confs(spark),
     }
     full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"

