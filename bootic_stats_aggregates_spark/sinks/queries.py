@@ -184,15 +184,17 @@ def stream_redis_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The final HINCRBY-accumulated hash state must equal the batch group-by
     — regardless of how the stream was micro-batched, because the per-batch
-    deltas are additive. Runs against FakeRedis here; the writer class is
-    the same one a real deployment points at a redis cluster.
+    deltas are additive. Runs against FakeRedis here — the RESP client
+    in-process over its own keyspace, one instance for every batch; the
+    writer class is the same one a real deployment points at a redis
+    cluster.
     """
     ev = stream_table(spark, sf_dir, "events")
     fake = FakeRedis()
     sink = RedisCounterSink(lambda: fake)
     run_foreach_batch(ev, sink, mode="append")
     rows = [
-        (key, field, int(val))
+        (key, field.decode(), val)
         for key, h in fake.hashes.items()
         for field, val in h.items()
     ]
@@ -226,9 +228,9 @@ def snk_redis_resp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sinks/resp.py; the socket_source.py pattern applied to the sink
     side). The final server-side counter hashes are read back over the
     same protocol and must equal the batch group-by — proving the wire
-    encoding, the transactional commit, and the bytes-reply normalization
-    end-to-end. A deployment swaps the URL for a real Redis cluster;
-    nothing else changes.
+    encoding, the transactional commit, and the bytes replies end-to-end.
+    A deployment swaps the URL for a real Redis cluster; nothing else
+    changes.
     """
     from .resp import MiniRedisServer, RespClient
 

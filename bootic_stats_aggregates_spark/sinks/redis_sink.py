@@ -32,18 +32,24 @@ Spark-first split:
    Spark's sequential micro-batch retry semantics (no two drivers
    committing the same batch concurrently), which foreachBatch guarantees.
 
+The rows are committed as collected, each (cmd, key, member, delta) tuple
+queued as its command, so a key or member may hold any character.
+
 No redis server (or client lib) ships in this container: the import is
-gated and `FakeRedis` implements the tiny command subset for tests and for
-the oracle-checked `stream_redis_counters` query.
+gated. `FakeRedis` (from `.resp`, re-exported here) is the RESP client run
+in-process over a keyspace of its own — the command code `MiniRedisServer`
+serves — for tests and for the oracle-checked `stream_redis_counters`
+query.
 """
 
 from __future__ import annotations
 
 import os
-from collections import defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .resp import FakeRedis, RespClient
 
 try:  # pragma: no cover - redis-py is not installed in this container
     import redis as _redis
@@ -77,14 +83,15 @@ def _user() -> Column:
 
 def _path() -> Column:
     """Top-page member. The fixture events carry no URL, so one is
-    synthesized from the JSON payload; ``parse_url`` is the real JVM-side
-    extraction a deployment would run on the referrer/page field. NULL or
-    unparseable props -> '-'."""
+    synthesized from the JSON payload; ``try_parse_url`` is the real
+    JVM-side extraction a deployment would run on the referrer/page field.
+    NULL or unparseable props, or a URL that does not parse, -> '-'
+    (``parse_url`` fails the whole batch on one bad URL under ANSI mode)."""
     url = F.concat(
         F.lit("https://shop.example.com/p/"),
         F.get_json_object("props", "$.k"),
     )
-    return _or_dash(F.parse_url(url, F.lit("PATH")))
+    return _or_dash(F.try_parse_url(url, F.lit("PATH")))
 
 
 def _commands() -> dict[str, Column]:
@@ -161,99 +168,6 @@ def unique_commands(events: DataFrame) -> DataFrame:
     return _aggregate(events, ("uniq",)).drop("delta")
 
 
-class Pipeline:
-    """Buffered command pipeline with redis-py's pipeline surface: queue
-    commands, apply them on ``execute()``. For FakeRedis (in-process,
-    single-threaded) execute() is trivially atomic, matching what
-    MULTI/EXEC gives the real client when ``transaction=True``."""
-
-    def __init__(self, parent) -> None:
-        self._parent = parent
-        self._ops: list[tuple[str, tuple]] = []
-
-    def _queue(self, method: str, *args):
-        self._ops.append((method, args))
-        return self
-
-    def hincrby(self, key, field, delta):
-        return self._queue("hincrby", key, field, delta)
-
-    def zincrby(self, key, delta, member):
-        return self._queue("zincrby", key, delta, member)
-
-    def sadd(self, key, member):
-        return self._queue("sadd", key, member)
-
-    def hset(self, key, field, value):
-        return self._queue("hset", key, field, value)
-
-    def set(self, key, value, nx=False):
-        return self._queue("set", key, value, nx)
-
-    def delete(self, key):
-        return self._queue("delete", key)
-
-    def execute(self) -> list:
-        results = [getattr(self._parent, m)(*a) for m, a in self._ops]
-        self._ops = []
-        return results
-
-
-class FakeRedis:
-    """In-memory stand-in with the redis-py command surface the sink needs
-    (counters, staging hashes, marker KV, pipelining)."""
-
-    def __init__(self) -> None:
-        self.hashes: dict[str, dict[str, int]] = defaultdict(dict)
-        self.zsets: dict[str, dict[str, float]] = defaultdict(dict)
-        self.sets: dict[str, set[str]] = defaultdict(set)
-        self.kv: dict[str, str] = {}
-        self.staging: dict[str, dict[str, str]] = defaultdict(dict)
-
-    def hincrby(self, key: str, field: str, delta: int) -> int:
-        h = self.hashes[key]
-        h[field] = h.get(field, 0) + int(delta)
-        return h[field]
-
-    def zincrby(self, key: str, delta: float, member: str) -> float:
-        z = self.zsets[key]
-        z[member] = z.get(member, 0.0) + float(delta)
-        return z[member]
-
-    def sadd(self, key: str, member: str) -> int:
-        before = len(self.sets[key])
-        self.sets[key].add(member)
-        return len(self.sets[key]) - before
-
-    # -- staging / marker surface (redis-py semantics) --
-
-    def hset(self, key: str, field: str, value) -> int:
-        fresh = field not in self.staging[key]
-        self.staging[key][field] = str(value)
-        return int(fresh)
-
-    def hgetall(self, key: str) -> dict[str, str]:
-        return dict(self.staging.get(key, {}))
-
-    def get(self, key: str):
-        return self.kv.get(key)
-
-    def set(self, key: str, value, nx: bool = False):
-        if nx and key in self.kv:
-            return None  # redis-py: None when NX blocks the write
-        self.kv[key] = str(value)
-        return True
-
-    def delete(self, key: str) -> int:
-        existed = int(key in self.staging or key in self.kv)
-        self.staging.pop(key, None)
-        self.kv.pop(key, None)
-        return existed
-
-    def pipeline(self, transaction: bool = True) -> Pipeline:
-        return Pipeline(self)
-
-
 #: Names a real Redis server as a redis:// URL (e.g.
 #: ``redis://localhost:6379/15``). Point it at a DEDICATED test database:
 #: the env-gated integration test flushes the db it connects to.
@@ -280,7 +194,6 @@ def client_factory_from_env(default_factory=FakeRedis):
 
         return factory
     if url:
-        from .resp import RespClient
 
         def resp_factory(u: str = url):
             return RespClient.from_url(u)
@@ -289,60 +202,32 @@ def client_factory_from_env(default_factory=FakeRedis):
     return default_factory
 
 
-def _stage_field(r) -> tuple[str, str]:
-    """Encode one (cmd, key, member, delta) row as a staged (field, value)
-    pair, the form :func:`commit_staged` applies.
+def commit_staged(client, rows, marker: str, stage_key: str) -> int:
+    """Apply a batch's command rows and its marker in ONE transaction.
 
-    Post-aggregation each (cmd, key, member) identity occurs exactly once
-    per batch. '|' never appears in keys (':'-joined) so the encoding is
-    unambiguous.
+    ``rows`` are (cmd, key, member, delta) tuples, as `batch_commands`
+    collects them; any cmd other than HINCRBY, ZINCRBY and SADD raises
+    ``ValueError`` before anything is sent. The marker rides INSIDE the
+    same MULTI/EXEC as the increments: either everything applied and the
+    marker exists, or nothing did — a crash mid-commit leaves live
+    counters untouched and the retry re-commits. Deleting ``stage_key``
+    in the same transaction drops a staging hash an older writer may have
+    left under it. Returns the number of command rows applied.
     """
-    if r.cmd not in ("HINCRBY", "ZINCRBY", "SADD"):
-        raise ValueError(f"unknown command {r.cmd!r}")
-    value = "1" if r.cmd == "SADD" else str(int(r.delta))
-    return f"{r.cmd}|{r.key}|{r.member}", value
-
-
-def _close(client) -> None:
-    """Close a client that holds a connection (FakeRedis holds none)."""
-    close = getattr(client, "close", None)
-    if close is not None:
-        close()
-
-
-def commit_staged(client, staged: dict, marker: str, stage_key: str) -> int:
-    """Apply staged deltas + marker + staging cleanup in ONE transaction.
-
-    The marker rides INSIDE the same MULTI/EXEC as the increments: either
-    everything applied and the marker exists, or nothing did — a crash
-    mid-commit leaves live counters untouched and the retry re-commits.
-    Deleting ``stage_key`` in the same transaction drops a staging hash a
-    writer may have left under it. Returns the number of increment
-    commands applied.
-
-    ``staged`` may come from ``client.hgetall(stage_key)``; a default
-    redis-py client (``decode_responses=False``) returns ``bytes``
-    fields/values, so both are normalized to ``str`` here rather than
-    requiring every client factory to opt into decoding (ADVICE r2).
-    """
-
-    def _s(x) -> str:
-        return x.decode("utf-8") if isinstance(x, (bytes, bytearray)) else str(x)
-
-    staged = {_s(f): _s(v) for f, v in staged.items()}
     pipe = client.pipeline(transaction=True)
-    for field in sorted(staged):
-        cmd, key, member = field.split("|", 2)
+    for cmd, key, member, delta in rows:
         if cmd == "HINCRBY":
-            pipe.hincrby(key, member, int(staged[field]))
+            pipe.hincrby(key, member, delta)
         elif cmd == "ZINCRBY":
-            pipe.zincrby(key, int(staged[field]), member)
-        else:  # SADD
+            pipe.zincrby(key, delta, member)
+        elif cmd == "SADD":
             pipe.sadd(key, member)
+        else:
+            raise ValueError(f"unknown command {cmd!r}")
     pipe.set(marker, 1, nx=True)
     pipe.delete(stage_key)
     pipe.execute()
-    return len(staged)
+    return len(rows)
 
 
 class RedisCounterSink:
@@ -352,10 +237,10 @@ class RedisCounterSink:
 
     ``client_factory`` is called once per batch, on the driver (a real
     deployment passes a redis-py connection-pool factory; tests pass
-    FakeRedis or a RESP client). The client is closed (if it has a
-    ``close``) when the call returns, so the factory should hand out a
-    connection of its own per call. ``distributed`` is accepted and
-    ignored: FakeRedis and socket clients share the one driver path.
+    FakeRedis or a RESP client). The client is closed when the call
+    returns, so the factory should hand out a connection of its own per
+    call (FakeRedis stays usable after ``close()``). ``distributed`` is
+    accepted and ignored: every client takes the one driver path.
     """
 
     def __init__(
@@ -371,7 +256,7 @@ class RedisCounterSink:
             if client.get(marker) is not None:
                 return  # batch fully committed by a previous attempt
             # collect(), not toLocalIterator(): one job, not one per partition
-            staged = dict(map(_stage_field, batch_commands(batch_df).collect()))
-            commit_staged(client, staged, marker, f"{self._ns}:stage:{batch_id}")
+            rows = batch_commands(batch_df).collect()
+            commit_staged(client, rows, marker, f"{self._ns}:stage:{batch_id}")
         finally:
-            _close(client)
+            client.close()

@@ -71,42 +71,36 @@ def test_real_redis_server_smoke(spark, batch, redis_url):
     assert expected.hashes, "expected non-empty counter state"
     assert expected.get("bootic:batch:11") is not None
 
-    def _dec(b):
-        return b.decode() if isinstance(b, (bytes, bytearray)) else str(b)
-
-    def state():
+    def state(c):
         return (
-            {k: {_dec(f): _dec(v) for f, v in client.hgetall(k).items()}
-             for k in expected.hashes},
-            {k: {_dec(m): s for m, s in client.zrange(k, 0, -1, withscores=True)}
-             for k in expected.zsets},
-            {k: {_dec(m) for m in client.smembers(k)} for k in expected.sets},
+            {k: c.hgetall(k) for k in expected.hashes},
+            {k: c.zrange(k, 0, -1, withscores=True) for k in expected.zsets},
+            {k: c.smembers(k) for k in expected.sets},
         )
 
-    got = state()
-    assert got == (
-        {k: {f: str(v) for f, v in h.items()} for k, h in expected.hashes.items()},
-        {k: {m: float(s) for m, s in z.items()} for k, z in expected.zsets.items()},
-        dict(expected.sets),
-    )
+    got = state(client)
+    assert got == state(expected)
     assert client.get("bootic:batch:11") is not None
     assert client.hgetall("bootic:stage:11") == {}
     sink(batch, batch_id=11)
-    assert state() == got
+    assert state(client) == got
 
 
-def test_resp_protocol_semantics():
-    """Wire-level contract of the in-process RESP pair: pipelined bursts,
-    MULTI/EXEC atomic apply, SET NX blocking, bytes replies (redis-py
-    decode_responses=False semantics), FLUSHDB, and DEL across types."""
+@pytest.mark.parametrize("transport", ["socket", "in_process"])
+def test_resp_protocol_semantics(transport):
+    """Contract of the RESP client, over a MiniRedisServer socket and as
+    FakeRedis in-process: pipelined bursts, MULTI/EXEC atomic apply, SET
+    NX blocking, bytes replies (redis-py decode_responses=False
+    semantics), HGETALL of a counter hash, FLUSHDB, and DEL across
+    types."""
     from bootic_stats_aggregates_spark.sinks.resp import (
         MiniRedisServer,
         RespClient,
     )
 
-    srv = MiniRedisServer()
+    srv = MiniRedisServer() if transport == "socket" else None
     try:
-        c = RespClient.from_url(srv.url)
+        c = RespClient.from_url(srv.url) if srv else FakeRedis()
         assert c.ping() == "PONG"
         # plain pipelined burst: one socket write for N commands
         p = c.pipeline(transaction=False)
@@ -121,7 +115,7 @@ def test_resp_protocol_semantics():
         t.set("marker", 1, nx=True)
         t.delete("h")
         out = t.execute()
-        assert len(out) == 5
+        assert len(out) == 5 and out[-1] == 1  # DEL removed the hash
         assert c.zrange("z", 0, -1, withscores=True) == [
             (b"b", 1.0), (b"a", 2.0),
         ]
@@ -156,7 +150,8 @@ def test_resp_protocol_semantics():
         assert c.hgetall("hh") == {b"f": b"12"}
         c.close()
     finally:
-        srv.close()
+        if srv:
+            srv.close()
 
 
 def test_resp_large_pipeline_no_deadlock_no_quadratic():
@@ -165,8 +160,8 @@ def test_resp_large_pipeline_no_deadlock_no_quadratic():
     used to deadlock against the server's per-command +QUEUED replies
     once both directions' buffers filled (~tens of KB each way), and the
     byte-string reassembly on both ends was quadratic in command count —
-    at sf0.1 the snk_redis_resp staging pipeline (~2x10^5 commands)
-    tripped the 30 s socket timeout. 6x10^4 commands here is ~2 MB of
+    at sf0.1 the snk_redis_resp pipeline (~2x10^5 commands) tripped the
+    30 s socket timeout. 6x10^4 commands here is ~2 MB of
     request and ~0.6 MB of inline replies: comfortably beyond any
     default socket buffer, yet must finish in single-digit seconds."""
     import time
@@ -183,14 +178,14 @@ def test_resp_large_pipeline_no_deadlock_no_quadratic():
         t0 = time.perf_counter()
         p = c.pipeline(transaction=True)
         for i in range(n):
-            p.hset("stage", f"f{i}", i)
+            p.hincrby("big", f"f{i}", i)
         replies = p.execute()
         elapsed = time.perf_counter() - t0
         assert len(replies) == n
         # full round-trip read-back of the large hash (HGETALL reply
         # assembly + client-side parse were both quadratic before)
         t0 = time.perf_counter()
-        h = c.hgetall("stage")
+        h = c.hgetall("big")
         elapsed_read = time.perf_counter() - t0
         assert len(h) == n and h[b"f0"] == b"0"
         # generous bounds: the quadratic forms took minutes / deadlocked
@@ -204,7 +199,8 @@ def test_resp_large_pipeline_no_deadlock_no_quadratic():
 def _hostile_batch(spark):
     """A small inline micro-batch with the rows the NULL policy exists for:
     NULL ts, NULL user_id, a bucket whose every value is NULL, and props
-    with no ``$.k`` (missing key, NULL, malformed)."""
+    with no ``$.k`` (missing key, NULL, malformed) or with one that makes
+    no valid URL."""
     from datetime import datetime
 
     t0 = datetime(2024, 3, 1, 10, 15)
@@ -223,6 +219,7 @@ def _hostile_batch(spark):
         (10, t0, 11, "refund", None, '{"j": 1}'),  # ... and no $.k
         (11, t1, 7, "view", 1.0, None),  # NULL props
         (12, t2, 12, "view", 2.0, "{"),  # malformed props
+        (13, t2, 12, "view", 1.0, '{"k": "x|y"}'),  # no valid URL
     ]
     schema = (
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -231,10 +228,12 @@ def _hostile_batch(spark):
     return spark.createDataFrame(rows, schema)
 
 
-def test_sink_state_matches_public_builders(spark):
-    """The one-pass plan the sink stages must leave the same Redis state as
-    applying the rows of the four oracle-checked builders directly
-    (``snk_redis_hash`` / ``_zset`` / ``_paths`` / ``_uniq``)."""
+def _builder_state(batch):
+    """The Redis state the rows of the four oracle-checked builders
+    (``snk_redis_hash`` / ``_zset`` / ``_paths`` / ``_uniq``) describe, as
+    a keyspace holds it: ``str`` keys, ``bytes`` members."""
+    from collections import defaultdict
+
     from bootic_stats_aggregates_spark.sinks.redis_sink import (
         counter_commands,
         path_ranking_commands,
@@ -242,29 +241,134 @@ def test_sink_state_matches_public_builders(spark):
         unique_commands,
     )
 
+    hashes, zsets, sets = defaultdict(dict), defaultdict(dict), defaultdict(set)
+    for r in counter_commands(batch).collect():
+        hashes[r.key][r.field.encode()] = r.delta
+    for build in (ranking_commands, path_ranking_commands):
+        for r in build(batch).collect():
+            zsets[r.key][r.member.encode()] = float(r.delta)
+    for r in unique_commands(batch).collect():
+        sets[r.key].add(r.member.encode())
+    return dict(hashes), dict(zsets), dict(sets)
+
+
+def test_sink_state_matches_public_builders(spark):
+    """The one-pass plan the sink commits must leave the same Redis state
+    as the rows of the four oracle-checked builders describe."""
     batch = _hostile_batch(spark)
     got = FakeRedis()
     RedisCounterSink(lambda: got)(batch, batch_id=3)
 
-    want = FakeRedis()
-    for r in counter_commands(batch).collect():
-        want.hincrby(r.key, r.field, r.delta)
-    for build in (ranking_commands, path_ranking_commands):
-        for r in build(batch).collect():
-            want.zincrby(r.key, r.delta, r.member)
-    for r in unique_commands(batch).collect():
-        want.sadd(r.key, r.member)
-
-    assert dict(got.hashes) == dict(want.hashes)
-    assert dict(got.zsets) == dict(want.zsets)
-    assert dict(got.sets) == dict(want.sets)
+    assert (dict(got.hashes), dict(got.zsets), dict(got.sets)) == _builder_state(batch)
     # the hostile rows reached their sentinel buckets and members
-    assert got.hashes["stats:refund:2024:03:01:10"] == {"n": 2, "cents": 0}
-    assert got.hashes["stats:view:-"] == {"n": 1, "cents": 300}
-    assert got.zsets["top_users:buy"]["-"] == 1.0
-    assert got.zsets["top_paths:refund:2024:03:01"]["-"] == 1.0
-    assert got.zsets["top_paths:view:2024:03:02"]["-"] == 1.0
-    assert got.sets["uniq:buy:-"] == {"-"}
+    assert got.hashes["stats:refund:2024:03:01:10"] == {b"n": 2, b"cents": 0}
+    assert got.hashes["stats:view:-"] == {b"n": 1, b"cents": 300}
+    assert got.zsets["top_users:buy"][b"-"] == 1.0
+    assert got.zsets["top_paths:refund:2024:03:01"][b"-"] == 1.0
+    assert got.zsets["top_paths:view:2024:03:02"][b"-"] == 2.0
+    assert got.sets["uniq:buy:-"] == {b"-"}
+
+
+def test_hostile_keys_commit_to_their_own_keys(spark):
+    """Event types and user ids holding ``|``, ``:``, empty strings and
+    NULLs go through the sink into a MiniRedisServer over RESP, and every
+    hash, zset and set equals the builders' rows. Keys embed the raw event
+    type, so a commit that encodes rows into delimited strings and splits
+    them back would send ``stats:a|b:...`` to hash ``stats:a``."""
+    from datetime import datetime
+
+    from bootic_stats_aggregates_spark.sinks.resp import (
+        MiniRedisServer,
+        RespClient,
+    )
+
+    t0 = datetime(2024, 3, 1, 10, 15)
+    rows = [
+        (1, t0, "u|1", "a|b", 1.5, '{"k": 1}'),
+        (2, t0, "u:2", "a|b", 2.0, '{"k": 2}'),
+        (3, None, "", "a:b", 0.25, '{"k": 2}'),
+        (4, t0, None, "", 3.0, '{"k": 3}'),
+        (5, t0, "|", None, 4.0, '{"k": 4}'),
+        (6, t0, "u|1", "|", None, None),
+        (7, None, ":", "a|b|c", 5.0, '{"k": ":"}'),
+    ]
+    batch = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id string, event_type string, "
+        "value double, props string",
+    )
+    srv = MiniRedisServer()
+    try:
+        RedisCounterSink(lambda: RespClient.from_url(srv.url))(batch, batch_id=9)
+        with srv.lock:
+            got = (
+                {k: h for k, h in srv.hashes.items() if h},
+                {k: z for k, z in srv.zsets.items() if z},
+                {k: s for k, s in srv.sets.items() if s},
+            )
+            assert srv.kv.get("bootic:batch:9") is not None
+    finally:
+        srv.close()
+    assert got == _builder_state(batch)
+    assert got[0]["stats:a|b:2024:03:01:10"] == {b"n": 2, b"cents": 350}
+    assert "stats:a" not in got[0]
+    assert got[1]["top_users:a|b"] == {b"u|1": 1.0, b"u:2": 1.0}
+    assert got[2]["uniq::2024:03:01"] == {b"-"}
+
+
+def test_benchmark_server_serves_the_sink(spark, tmp_path):
+    """``perfbench/server.py`` runs a MiniRedisServer in a process of its
+    own and reads and patches its keyspace, ``lock``, ``_tcp``, ``port``
+    and ``apply``. One batch committed into it through the RESP sink must
+    show in its ``stats`` and ``dump`` as in the FakeRedis state of the
+    same batch."""
+    import functools
+    import json
+    import subprocess
+    import sys
+
+    from bootic_stats_aggregates_spark.sinks.redis_sink import batch_commands
+    from bootic_stats_aggregates_spark.sinks.resp import RespClient
+
+    server = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "server.py",
+    )
+    batch = _hostile_batch(spark)
+    dump_path = tmp_path / "dump.json"
+    # leaving the block closes the server's stdin, which stops it
+    with subprocess.Popen(
+        [sys.executable, server], stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+        text=True,
+    ) as proc:
+
+        def ask(line):
+            proc.stdin.write(line + "\n")
+            proc.stdin.flush()
+            return proc.stdout.readline()
+
+        port = int(proc.stdout.readline().split()[1])
+        url = f"redis://127.0.0.1:{port}/0"
+        RedisCounterSink(
+            functools.partial(RespClient.from_url, url), distributed=True
+        )(batch, batch_id=4)
+        stats = json.loads(ask("stats"))
+        # GET marker, then the transaction: every row, SET NX and DEL
+        n = batch_commands(batch).count()
+        assert stats["connections"] == 1 and stats["commands"] == n + 3, stats
+        assert stats["bytes_in"] > 0 and stats["busy_s"] >= 0 and stats["cpu_s"] > 0
+        assert ask(f"dump {dump_path}").strip() == "ok"
+
+    fake = FakeRedis()
+    RedisCounterSink(lambda: fake)(batch, batch_id=4)
+    assert json.loads(dump_path.read_text()) == {
+        "hashes": {k: {f.decode(): v for f, v in h.items()}
+                   for k, h in fake.hashes.items() if h},
+        "zsets": {k: {m.decode(): s for m, s in z.items()}
+                  for k, z in fake.zsets.items() if z},
+        "sets": {k: sorted(m.decode() for m in s) for k, s in fake.sets.items() if s},
+        "kv": {k: v.decode() for k, v in fake.kv.items()},
+    }
 
 
 def test_batch_commands_is_one_scan_one_shuffle(spark, tmp_path):

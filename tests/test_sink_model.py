@@ -44,13 +44,13 @@ def test_fakeredis_matches_dict_model(cmds):
     for cmd, key, a, b in cmds:
         if cmd == "HINCRBY":
             r.hincrby(key, a, b)
-            hashes[key][a] += b
+            hashes[key][a.encode()] += b
         elif cmd == "ZINCRBY":
             r.zincrby(key, b, a)
-            zsets[key][a] += b
+            zsets[key][a.encode()] += b
         else:
             r.sadd(key, a)
-            sets[key].add(a)
+            sets[key].add(a.encode())
     assert {k: dict(v) for k, v in r.hashes.items() if v} == {
         k: dict(v) for k, v in hashes.items() if v
     }
@@ -62,52 +62,17 @@ def test_fakeredis_matches_dict_model(cmds):
     }
 
 
-def _stage_and_maybe_commit(r, batch_id, rows, crash_before_commit=False):
-    """The sink's two-phase protocol without Spark: marker check -> staged
-    HSETs (idempotent overwrite) -> atomic commit (increments + marker +
-    staging cleanup in one transaction)."""
-    from bootic_stats_aggregates_spark.sinks.redis_sink import (
-        _stage_field,
-        commit_staged,
-    )
+def _sink_call(r, batch_id, rows, crash_before_commit=False):
+    """The sink's protocol without Spark: marker check -> one atomic
+    commit of the batch's rows, its marker and its stage-key DEL."""
+    from bootic_stats_aggregates_spark.sinks.redis_sink import commit_staged
 
     marker = f"m:{batch_id}"
     if r.get(marker) is not None:
         return
-    stage_key = f"stage:{batch_id}"
-    pipe = r.pipeline(transaction=False)
-    for row in rows:
-        field, value = _stage_field(row)
-        pipe.hset(stage_key, field, value)
-    pipe.execute()
     if crash_before_commit:
-        return  # simulated failure AFTER staging, BEFORE the commit txn
-    commit_staged(r, r.hgetall(stage_key), marker, stage_key)
-
-
-class _Row:
-    def __init__(self, **kw):
-        self.__dict__.update(kw)
-
-
-def test_commit_staged_accepts_bytes_hgetall():
-    """A default redis-py client (decode_responses=False) hands hgetall back
-    as bytes; commit_staged must normalize rather than TypeError on
-    field.split (ADVICE r2)."""
-    from bootic_stats_aggregates_spark.sinks.redis_sink import commit_staged
-
-    r = FakeRedis()
-    staged = {
-        b"HINCRBY|stats:view:2024:01:01|n": b"7",
-        b"ZINCRBY|rank:prod|42": b"3",
-        b"SADD|uniq:day|9": b"1",
-    }
-    n = commit_staged(r, staged, "m:bytes", "stage:bytes")
-    assert n == 3
-    assert r.hashes["stats:view:2024:01:01"]["n"] == 7
-    assert r.zsets["rank:prod"]["42"] == 3.0
-    assert "9" in r.sets["uniq:day"]
-    assert r.get("m:bytes") is not None
+        return  # simulated failure BEFORE the commit txn: nothing applied
+    commit_staged(r, rows, marker, f"stage:{batch_id}")
 
 
 @given(
@@ -117,21 +82,21 @@ def test_commit_staged_accepts_bytes_hgetall():
 @settings(max_examples=100, deadline=None)
 def test_two_phase_commit_exactly_once(batches, crash_ids):
     """Replaying any batch — including batches whose first attempt crashed
-    between staging and commit — must yield exactly-once counter totals.
-    (The r1 marker-BEFORE-apply ordering failed this: a crash mid-apply
-    left the marker set and the retry skipped the batch entirely.)"""
+    before its commit — must yield exactly-once counter totals. (The r1
+    marker-BEFORE-apply ordering failed this: a crash mid-apply left the
+    marker set and the retry skipped the batch entirely.)"""
     r = FakeRedis()
-    rows_of = lambda key, delta: [_Row(cmd="HINCRBY", key=key, member="n", delta=delta)]
+    rows_of = lambda key, delta: [("HINCRBY", key, "n", delta)]
     for batch_id, (key, delta) in enumerate(batches):
-        _stage_and_maybe_commit(
+        _sink_call(
             r, batch_id, rows_of(key, delta), crash_before_commit=batch_id in crash_ids
         )
     # every batch retried (out of order, twice) — crashed ones now succeed
     for batch_id, (key, delta) in list(enumerate(batches))[::-1] * 2:
-        _stage_and_maybe_commit(r, batch_id, rows_of(key, delta))
+        _sink_call(r, batch_id, rows_of(key, delta))
     expected: dict = defaultdict(int)
     for key, delta in batches:
         expected[key] += delta
-    assert {k: v["n"] for k, v in r.hashes.items() if v} == dict(expected)
-    # all staging hashes cleaned up, one marker per batch
-    assert not any(r.hgetall(f"stage:{b}") for b in range(len(batches)))
+    assert {k: v[b"n"] for k, v in r.hashes.items() if v} == dict(expected)
+    # one marker per batch, and nothing else in the string keyspace
+    assert set(r.kv) == {f"m:{b}" for b in range(len(batches))}
