@@ -218,12 +218,17 @@ class FileEntry:
     def may_contain(self, col: str, lo: Any, hi: Any) -> bool:
         """Conservative range-overlap test: True unless the file's stats
         PROVE no row with ``col`` in [lo, hi] exists (missing stats, or a
-        file with any NULL-only stat, always returns True)."""
+        file with any NULL-only stat, always returns True). A ``None``
+        bound is open: the native source's pushed ``col > x`` filters
+        prune through here with ``hi=None``."""
         s = self.stats.get(col)
         if not s or s.get("min") is None or s.get("max") is None:
             return True
         try:
-            return not (s["max"] < lo or s["min"] > hi)
+            return not (
+                (lo is not None and s["max"] < lo)
+                or (hi is not None and s["min"] > hi)
+            )
         except TypeError:  # JSON round-trip changed the type: stay safe
             return True
 
@@ -1717,19 +1722,11 @@ class MiniLogTable:
 
     def delete_where(self, col: str, lo: Any, hi: Any) -> dict:
         """Delete rows with ``col`` in [lo, hi], rewriting ONLY the files
-        whose stats overlap the range (data skipping on the write path)."""
+        whose stats overlap the range (data skipping on the write path;
+        partition values are checked ahead of stats, so a
+        partition-keyed delete touches only the matching directories)."""
         snap = self.snapshot()
-        pcol = snap.physical_of(col)
-        touched = [
-            f
-            for f in snap.files
-            # partition values ahead of stats (r10): a partition-keyed
-            # delete touches only the matching directories — partition
-            # columns carry no file stats, so may_contain alone would
-            # conservatively rewrite/mask the whole table
-            if self._partition_matches(f, pcol, lo, hi)
-            and f.may_contain(pcol, lo, hi)
-        ]
+        touched = self._select_entries(snap, [(col, lo, hi)])
         if not touched:
             return {"version": snap.version, "rewritten": 0, "kept": len(snap.files)}
         # NULL contract: a NULL key is never "in [lo, hi]" — it must
@@ -1738,25 +1735,42 @@ class MiniLogTable:
         kept_df = self._read_entries_with_ids(touched, snap.schema).filter(
             F.col(col).isNull() | ~F.col(col).between(F.lit(lo), F.lit(hi))
         )
-        actions = self._stage(
-            kept_df,
-            # preserve the touched-file granularity: a rewrite of K
-            # files lands ~K files (coalesce never raises parallelism,
-            # so small tables still collapse) — staging with a literal
-            # 1 single-tasked a 60M-row rewrite at the 100x probe
-            # (tools/scale100_r12.log, r12)
-            max(1, len(touched)),
-            mapping=_mapping_of(snap.schema),
-            partition_cols=tuple(snap.partition_cols),
-        ) + [
-            {"type": "remove", "file": f.file, "base_dv": f.dv} for f in touched
-        ]
+        actions = self._rewrite_actions(snap, kept_df, touched)
         v = self._try_commit("delete", actions)
         return {
             "version": v,
             "rewritten": len(touched),
             "kept": len(snap.files) - len(touched),
         }
+
+    def _rewrite_actions(
+        self,
+        snap: Snapshot,
+        df: DataFrame,
+        touched: list,
+        mapping: Optional[dict] = None,
+        constraints: Optional[dict] = None,
+    ) -> list[dict]:
+        """The copy-on-write tail shared by every rewriting verb: stage
+        ``df`` (the touched files' surviving and rewritten rows) and
+        remove ``touched``, each remove pinning its ``base_dv``.
+        ``mapping`` defaults to the snapshot's column mapping.
+
+        Staging keeps the touched-file granularity: a rewrite of K
+        files lands ~K files (coalesce never raises parallelism, so
+        small tables still collapse) — staging with a literal 1
+        single-tasked a 60M-row rewrite at the 100x probe
+        (tools/scale100_r12.log, r12)."""
+        return self._stage(
+            df,
+            max(1, len(touched)),
+            mapping=_mapping_of(snap.schema) if mapping is None else mapping,
+            constraints=constraints,
+            partition_cols=tuple(snap.partition_cols),
+        ) + [
+            {"type": "remove", "file": f.file, "base_dv": f.dv}
+            for f in touched
+        ]
 
     def _files_matching(
         self, snap: Snapshot, predicate: str, alias: Optional[str] = None
@@ -1831,26 +1845,34 @@ class MiniLogTable:
         kept_df = base_df.filter(
             ~F.expr(predicate).eqNullSafe(F.lit(True))
         )
-        actions = self._stage(
-            kept_df,
-            # preserve the touched-file granularity: a rewrite of K
-            # files lands ~K files (coalesce never raises parallelism,
-            # so small tables still collapse) — staging with a literal
-            # 1 single-tasked a 60M-row rewrite at the 100x probe
-            # (tools/scale100_r12.log, r12)
-            max(1, len(touched)),
-            mapping=_mapping_of(snap.schema),
-            partition_cols=tuple(snap.partition_cols),
-        ) + [
-            {"type": "remove", "file": f.file, "base_dv": f.dv}
-            for f in touched
-        ]
+        actions = self._rewrite_actions(snap, kept_df, touched)
         v = self._try_commit("delete", actions)
         return {
             "version": v,
             "rewritten": len(touched),
             "kept": len(snap.files) - len(touched),
         }
+
+    @staticmethod
+    def _check_update_args(
+        snap: Snapshot, assignments: dict[str, str], verb: str
+    ) -> dict:
+        """UPDATE's argument check, shared by both UPDATE verbs: the
+        table must hold data, every SET target must exist, and none may
+        be a GENERATED column. Returns the generated-column set."""
+        if not snap.schema or not snap.files:
+            raise SchemaMismatch(f"{verb} needs a non-empty log-tracked table")
+        gens = dict(snap.generated)
+        unknown = sorted(set(assignments) - {c["name"] for c in snap.schema})
+        if unknown:
+            raise ValueError(f"{verb}: no such column(s) {unknown}")
+        bad_gen = sorted(set(assignments) & set(gens))
+        if bad_gen:
+            raise ValueError(
+                f"{verb}: {bad_gen} are GENERATED columns — "
+                "their values derive from their expression"
+            )
+        return gens
 
     def update_where(
         self,
@@ -1867,21 +1889,7 @@ class MiniLogTable:
         columns are recomputed (assigning one directly raises, as
         Delta does). Backs the SQL surface's UPDATE statement."""
         snap = self.snapshot()
-        if not snap.schema or not snap.files:
-            raise SchemaMismatch(
-                "update_where needs a non-empty log-tracked table"
-            )
-        names = {c["name"] for c in snap.schema}
-        gens = dict(snap.generated)
-        unknown = sorted(set(assignments) - names)
-        if unknown:
-            raise ValueError(f"update_where: no such column(s) {unknown}")
-        bad_gen = sorted(set(assignments) & set(gens))
-        if bad_gen:
-            raise ValueError(
-                f"update_where: {bad_gen} are GENERATED columns — "
-                "their values derive from their expression"
-            )
+        gens = self._check_update_args(snap, assignments, "update_where")
         touched = (
             list(snap.files)
             if predicate is None
@@ -1922,15 +1930,7 @@ class MiniLogTable:
             df.select(*sel, F.col(ROW_ID_COL)), gens
         ).select(*[c["name"] for c in snap.schema], F.col(ROW_ID_COL))
         self._validate_constraints(out, dict(snap.constraints))
-        actions = self._stage(
-            out,
-            max(1, len(touched)),  # see delete_predicate staging note
-            mapping=_mapping_of(snap.schema),
-            partition_cols=tuple(snap.partition_cols),
-        ) + [
-            {"type": "remove", "file": f.file, "base_dv": f.dv}
-            for f in touched
-        ]
+        actions = self._rewrite_actions(snap, out, touched)
         v = self._try_commit("update", actions)
         return {
             "version": v,
@@ -1973,23 +1973,7 @@ class MiniLogTable:
         same-file commit aborts via :class:`ConcurrentModification`.
         """
         snap = self.snapshot()
-        if not snap.schema or not snap.files:
-            raise SchemaMismatch(
-                "update_predicate_dv needs a non-empty log-tracked table"
-            )
-        names = {c["name"] for c in snap.schema}
-        gens = dict(snap.generated)
-        unknown = sorted(set(assignments) - names)
-        if unknown:
-            raise ValueError(
-                f"update_predicate_dv: no such column(s) {unknown}"
-            )
-        bad_gen = sorted(set(assignments) & set(gens))
-        if bad_gen:
-            raise ValueError(
-                f"update_predicate_dv: {bad_gen} are GENERATED columns — "
-                "their values derive from their expression"
-            )
+        gens = self._check_update_args(snap, assignments, "update_predicate_dv")
         touched = (
             list(snap.files)
             if predicate is None
@@ -2091,24 +2075,16 @@ class MiniLogTable:
         version reads the file unmasked.
         """
         snap = self.snapshot()
-        pcol = snap.physical_of(col)
-        touched = [
-            f
-            for f in snap.files
-            # partition values ahead of stats (r10): a partition-keyed
-            # delete touches only the matching directories — partition
-            # columns carry no file stats, so may_contain alone would
-            # conservatively rewrite/mask the whole table
-            if self._partition_matches(f, pcol, lo, hi)
-            and f.may_contain(pcol, lo, hi)
-        ]
+        touched = self._select_entries(snap, [(col, lo, hi)])
         if not touched:
             return {"version": snap.version, "dv_files": 0, "dv_rows": 0}
         matched = (
             # _tagged_read exposes RAW parquet columns: filter on the
             # physical name (identity without mapping)
             self._tagged_read(touched)
-            .filter(F.col(pcol).between(F.lit(lo), F.lit(hi)))
+            .filter(
+                F.col(snap.physical_of(col)).between(F.lit(lo), F.lit(hi))
+            )
             .select(
                 F.col("__dv_file").alias("file"),
                 F.col("__dv_pos").alias("row_index"),
@@ -2259,125 +2235,26 @@ class MiniLogTable:
         keys: tuple[str, ...],
         prune_col: Optional[str] = None,
     ) -> dict:
-        """MERGE (last-writer-wins upsert): matched keys take the update
-        row, unmatched base rows survive, new keys insert — rewriting only
-        the files whose ``prune_col`` stats overlap the updates' key range.
+        """MERGE (last-writer-wins upsert), the whole-row case of
+        :meth:`merge_clauses`: matched keys take the update row, unmatched
+        base rows survive, new keys insert — rewriting only the files
+        whose ``prune_col`` stats overlap the updates' key range.
 
         Key equality is NULL-SAFE (``<=>``): a NULL-keyed update row
-        updates the NULL-keyed base row instead of silently inserting a
-        duplicate — the semantic Delta's MERGE docs recommend for
-        nullable keys; oracles must mirror it with IS NOT DISTINCT FROM.
-
-        "Matched keys take the update row" is literal: the whole update
-        row wins, INCLUDING intentional NULLs in non-key columns. The
-        match is carried by an explicit marker column on the update side
-        (not per-column coalesce, which would silently keep the stale
-        base value whenever an update sets a column to NULL — ADVICE r6).
-
-        Updates must be unique on ``keys``: a duplicate key would fan out
-        the full-outer join, duplicating matched base rows with a
-        nondeterministic last-writer — Delta raises the same
-        multiple-match error; we fail fast with :class:`ValueError`.
-
-        Correctness of the pruning: ``prune_col`` must be one of ``keys``.
-        A file whose [min, max] on that key does not intersect the
-        updates' [min, max] cannot contain a matching key, so skipping it
-        cannot lose a MATCHED row; all NOT-MATCHED inserts ride the
-        rewrite output. At 100 TB this is the difference between a MERGE
-        that rewrites 3 files and one that rewrites the table.
-        """
-        prune_col = prune_col or keys[0]
-        assert prune_col in keys, "prune_col must be a merge key"
-        snap0 = self.snapshot() if self.version >= 0 else None
-        cons = dict(snap0.constraints) if snap0 else {}
-        gens = dict(snap0.generated) if snap0 else {}
-        if gens:
-            # the update side honors generated columns like any write:
-            # omitted -> materialized, provided-but-wrong -> rejected
-            updates = self._apply_generated(updates, gens)
-        # fail fast on duplicate update keys (NULL-safe: groupBy buckets
-        # NULL keys into one group, matching eqNullSafe below)
-        n_dup = (
-            updates.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .filter(F.col("__c") > 1)
-            .limit(1)
-            .count()
+        updates the NULL-keyed base row instead of inserting a duplicate.
+        The whole update row wins, INCLUDING intentional NULLs in non-key
+        columns (ADVICE r6). Updates must be unique on ``keys`` (a
+        :class:`ValueError` matching "duplicate keys" otherwise); an
+        empty update set commits nothing. Returns ``version``,
+        ``rewritten`` and ``kept``."""
+        info = self.merge_clauses(
+            updates,
+            keys,
+            matched=({"action": "update", "set": None},),
+            not_matched=({"action": "insert"},),
+            prune_col=prune_col,
         )
-        if n_dup:
-            raise ValueError(
-                f"merge: updates contain duplicate keys on {keys} — "
-                "dedupe (e.g. row_number() == 1) before merging"
-            )
-        snap = self.snapshot()
-        bounds = updates.agg(
-            F.min(prune_col).alias("lo"),
-            F.max(prune_col).alias("hi"),
-            F.sum(F.col(prune_col).isNull().cast("long")).alias("nulls"),
-        ).collect()[0]
-        upd_nulls = bool(bounds["nulls"])
-        if bounds["lo"] is None and not upd_nulls:  # truly empty updates
-            return {
-                "version": snap.version,
-                "rewritten": 0,
-                "kept": len(snap.files),
-            }
-        # a file is touched if its range may hold a matching non-NULL key,
-        # OR the updates carry NULL keys and the file may hold NULL-keyed
-        # rows (min/max ignore NULLs — the per-file NULL count covers them)
-        pprune = snap.physical_of(prune_col)
-        touched = self._merge_scope(
-            snap, pprune, bounds["lo"], bounds["hi"], upd_nulls
-        )
-        untouched = len(snap.files) - len(touched)
-        updates = updates.drop(ROW_ID_COL)  # ids are never caller-supplied
-        if touched:
-            # row tracking: read the base WITH ids — an UPDATED row
-            # keeps the id of the base row it replaced (that identity
-            # is what links its CDF pre/post images), untouched base
-            # rows keep theirs, and inserts carry NULL (they draw fresh
-            # ids from the new file's reserved range on read)
-            base = self._read_entries_with_ids(touched, snap.schema)
-        else:
-            base = self.spark.createDataFrame(
-                [], updates.schema
-            ).withColumn(ROW_ID_COL, F.lit(None).cast("long"))
-        # the marker column makes "update row wins" row-wise, not
-        # column-wise: __upd is non-NULL exactly when an update row
-        # matched, so an intentional NULL in a non-key update column is
-        # WRITTEN, never silently replaced by the stale base value
-        b = base.alias("b")
-        u = updates.withColumn("__upd", F.lit(True)).alias("u")
-        cond = None
-        for k in keys:
-            eq = F.col(f"b.{k}").eqNullSafe(F.col(f"u.{k}"))
-            cond = eq if cond is None else (cond & eq)
-        merged = b.join(u, cond, "full_outer").select(
-            *[
-                (
-                    F.col(f"b.{c}").alias(c)  # id follows the BASE row
-                    if c == ROW_ID_COL
-                    else F.when(F.col("u.__upd"), F.col(f"u.{c}"))
-                    .otherwise(F.col(f"b.{c}"))
-                    .alias(c)
-                )
-                for c in base.columns
-            ]
-        )
-        actions = self._stage(
-            merged,
-            max(1, len(touched)),  # see delete_predicate staging note
-            mapping=_mapping_of(snap.schema),
-            constraints=cons,
-            partition_cols=tuple(snap.partition_cols),
-        ) + [
-            {"type": "remove", "file": f.file, "base_dv": f.dv} for f in touched
-        ]
-        # pins (cons, gens): a MERGE introduces NEW rows (the inserts +
-        # update images), so it carries the same validate->commit
-        # TOCTOU hazard as append (ADVICE r8 medium)
-        v = self._commit_validated("merge", actions, cons, gens)
-        return {"version": v, "rewritten": len(touched), "kept": untouched}
+        return {k: info[k] for k in ("version", "rewritten", "kept")}
 
     def merge_clauses(
         self,
@@ -2416,12 +2293,19 @@ class MiniLogTable:
         (unqualified names raise Spark's ambiguity error when present
         on both sides — qualify them).
 
-        Semantics shared with :meth:`merge`: key equality is NULL-SAFE;
-        source must be unique on ``keys`` (multiple matches per base
-        row would be nondeterministic — Delta raises the same error);
-        updated/kept rows keep their stable row ids, inserts draw fresh
-        ones, so :meth:`changes_with_ids` across the commit emits
-        update-linked pre/post images for every fired update clause.
+        Key equality is NULL-SAFE; source must be unique on ``keys``
+        (multiple matches per base row would be nondeterministic —
+        Delta raises the same error, here a :class:`ValueError`
+        matching "duplicate keys"); updated/kept rows keep their stable
+        row ids, inserts draw fresh ones, so :meth:`changes_with_ids`
+        across the commit emits update-linked pre/post images for every
+        fired update clause. Generated columns the source omits are
+        materialized on the source before the join.
+
+        The table needs a log and a log-tracked schema. A table whose
+        rows were all deleted (schema, no live files) is a valid
+        target: every source row is not-matched. An empty source with
+        no ``not_matched_by_source`` clause commits nothing.
 
         ``evolve_schema=True`` (VERDICT r9 task 2, Delta's
         autoMerge-on-MERGE): source columns absent from the table are
@@ -2434,6 +2318,9 @@ class MiniLogTable:
         key range, but a ``not_matched_by_source`` clause must examine
         EVERY base row, so its presence widens the rewrite to all live
         files — the same cost Delta documents for that clause.
+        ``prune_col`` must be a merge key: a file whose [min, max] on it
+        misses the source's [min, max] cannot hold a matching key, so
+        skipping it cannot lose a matched row.
         """
         assert matched or not_matched or not_matched_by_source, (
             "merge_clauses: at least one clause required"
@@ -2444,15 +2331,14 @@ class MiniLogTable:
             assert cl.get("action") == "insert", cl
         prune_col = prune_col or keys[0]
         assert prune_col in keys, "prune_col must be a merge key"
-        snap = self.snapshot() if self.version >= 0 else None
-        if snap is None or not snap.files:
+        if self.version < 0:
             raise ValueError(
-                "merge_clauses: target table is empty — append instead"
+                "merge_clauses: the table has no log yet — append instead"
             )
+        snap = self.snapshot()
         if not snap.schema:
             raise SchemaMismatch(
-                "merge_clauses needs a log-tracked table schema "
-                "(pre-schema tables: use merge())"
+                "merge_clauses needs a log-tracked table schema"
             )
         cons = dict(snap.constraints)
         gens = dict(snap.generated)
@@ -2530,6 +2416,14 @@ class MiniLogTable:
             F.sum(F.col(prune_col).isNull().cast("long")).alias("nulls"),
         ).collect()[0]
         upd_nulls = bool(bounds["nulls"])
+        if bounds["lo"] is None and not upd_nulls and not nmbs:
+            # an empty source matches and inserts nothing
+            return {
+                "version": snap.version,
+                "rewritten": 0,
+                "kept": len(snap.files),
+                "evolved": [],
+            }
         pprune = snap.physical_of(prune_col)
         if nmbs:
             touched = list(snap.files)  # every base row is examined
@@ -2538,6 +2432,9 @@ class MiniLogTable:
                 snap, pprune, bounds["lo"], bounds["hi"], upd_nulls
             )
         untouched = len(snap.files) - len(touched)
+        for name, expr in sorted(gens.items()):
+            if name not in source.columns:  # validated post-projection
+                source = source.withColumn(name, F.expr(expr))
         source = source.drop(ROW_ID_COL)
         if touched:
             base = self._read_entries_with_ids(touched, snap.schema)
@@ -2653,16 +2550,12 @@ class MiniLogTable:
             # only VALIDATES: an update clause writing a generated
             # column inconsistently rejects the whole merge
             merged = self._apply_generated(merged, gens)
-        actions = self._stage(
-            merged,
-            max(1, len(touched)),  # see delete_predicate staging note
-            mapping=mapping,
-            constraints=cons,
-            partition_cols=tuple(snap.partition_cols),
-        ) + [
-            {"type": "remove", "file": f.file, "base_dv": f.dv}
-            for f in touched
-        ]
+        actions = self._rewrite_actions(
+            snap, merged, touched, mapping=mapping, constraints=cons
+        )
+        # pins (cons, gens): a MERGE introduces NEW rows (the inserts +
+        # update images), so it carries the same validate->commit
+        # TOCTOU hazard as append (ADVICE r8 medium)
         v = self._commit_validated(
             "merge",
             actions,
@@ -2965,7 +2858,7 @@ class MiniLogTable:
         self, snap: "Snapshot", pprune: str, lo: Any, hi: Any,
         upd_nulls: bool,
     ) -> list["FileEntry"]:
-        """Write-side file scope shared by merge()/merge_clauses():
+        """Write-side file scope of :meth:`merge_clauses`:
         partition values checked AHEAD of min/max stats — a partition
         column carries NO file stats (its bytes live in directory
         names), so stats-only scoping on a partition prune key would
@@ -2993,15 +2886,15 @@ class MiniLogTable:
         """DIRECTORY-LEVEL pruning, ahead of stats: partition values
         are EXACT (a d=5 file holds only d=5 rows), so a mismatch is a
         proof, not a heuristic. NULL-partition files never match a
-        range (NULL is never in [lo, hi]); a JSON-typing surprise keeps
-        the file (conservative, like stats)."""
+        range (NULL is never in [lo, hi]); a ``None`` bound is open; a
+        JSON-typing surprise keeps the file (conservative, like stats)."""
         if p not in f.partition:
             return True  # unpartitioned on this column: can't prune here
         v = f.partition[p]
         if v is None:
             return False
         try:
-            return lo <= v <= hi
+            return (lo is None or lo <= v) and (hi is None or v <= hi)
         except TypeError:
             return True
 
@@ -3594,8 +3487,6 @@ class MiniLogTable:
         re-clusters the whole table, they z-order the partitions the
         hot queries hit). Bucket bounds come from the SCOPED files, so
         the z-resolution adapts to the scope's own value range."""
-        from .layout import _interleave_sql
-
         snap = self.snapshot()
         scope = self._select_entries(snap, self._normalize_prune(where))
         if not scope:
@@ -3604,37 +3495,8 @@ class MiniLogTable:
         # column — a Z-ORDER rewrite moves rows between files freely
         # while every row keeps its id
         df = self._read_entries_with_ids(scope, snap.schema)
-
-        def bounds(col: str) -> tuple[Any, Any]:
-            p = snap.physical_of(col)
-            mins = [f.stats.get(p, {}).get("min") for f in scope]
-            maxs = [f.stats.get(p, {}).get("max") for f in scope]
-            if all(v is not None for v in mins + maxs):
-                return min(mins), max(maxs)  # pure metadata
-            row = df.agg(
-                F.min(col).alias("lo"), F.max(col).alias("hi")
-            ).collect()[0]
-            return row["lo"], row["hi"]
-
-        n_buckets = 1 << bits
-        tmp = df
-        for suffix, col in zip(("__bx", "__by"), cols):
-            lo, hi = bounds(col)
-            span = (hi - lo + 1) if (hi is not None and lo is not None) else 1
-            b = F.floor(
-                (F.col(col) - F.lit(lo)).cast("double")
-                * n_buckets
-                / F.lit(span)
-            ).cast("long")
-            b = F.least(F.greatest(b, F.lit(0)), F.lit(n_buckets - 1))
-            tmp = tmp.withColumn(suffix, F.coalesce(b, F.lit(0)))
-        ordered = (
-            tmp.withColumn(
-                "__z", F.expr(_interleave_sql("__bx", "__by", bits))
-            )
-            .repartitionByRange(target_files, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__bx", "__by", "__z")
+        ordered = self._morton_sorted(
+            df, scope, snap, cols, target_files, bits
         )
         actions = self._stage(
             ordered,
@@ -3647,6 +3509,52 @@ class MiniLogTable:
         ]
         v = self._try_commit("zorder", actions)
         return {"version": v, "rewritten": len(scope)}
+
+    @staticmethod
+    def _morton_sorted(
+        df: DataFrame,
+        scope: list[FileEntry],
+        snap: Snapshot,
+        cols: tuple[str, str],
+        target_files: int,
+        bits: int,
+    ) -> DataFrame:
+        """``df`` range-partitioned into ``target_files`` and sorted on
+        the Morton interleave of two columns, each scaled linearly into
+        2^bits buckets (NULLs to bucket 0). Bounds come from the
+        ``scope`` files' log stats when every file has them (no job),
+        else from one aggregate over ``df``."""
+        from .layout import _interleave_sql
+
+        n_buckets = 1 << bits
+        tmp = df
+        for suffix, col in zip(("__bx", "__by"), cols):
+            p = snap.physical_of(col)
+            mins = [f.stats.get(p, {}).get("min") for f in scope]
+            maxs = [f.stats.get(p, {}).get("max") for f in scope]
+            if all(v is not None for v in mins + maxs):
+                lo, hi = min(mins), max(maxs)  # pure metadata
+            else:
+                row = df.agg(
+                    F.min(col).alias("lo"), F.max(col).alias("hi")
+                ).collect()[0]
+                lo, hi = row["lo"], row["hi"]
+            span = (hi - lo + 1) if (hi is not None and lo is not None) else 1
+            b = F.floor(
+                (F.col(col) - F.lit(lo)).cast("double")
+                * n_buckets
+                / F.lit(span)
+            ).cast("long")
+            b = F.least(F.greatest(b, F.lit(0)), F.lit(n_buckets - 1))
+            tmp = tmp.withColumn(suffix, F.coalesce(b, F.lit(0)))
+        return (
+            tmp.withColumn(
+                "__z", F.expr(_interleave_sql("__bx", "__by", bits))
+            )
+            .repartitionByRange(target_files, "__z")
+            .sortWithinPartitions("__z")
+            .drop("__bx", "__by", "__z")
+        )
 
     # --------------------------------------- incremental clustering (r10)
     def set_cluster_keys(self, cols: tuple[str, ...]) -> int:
@@ -3711,8 +3619,6 @@ class MiniLogTable:
         incremental passes. Row ids ride as a materialized column;
         conflict semantics are OPTIMIZE's (maintenance loses to any
         racing data change)."""
-        from .layout import _interleave_sql
-
         snap = self.snapshot()
         if not snap.cluster_cols:
             raise ValueError(
@@ -3742,43 +3648,8 @@ class MiniLogTable:
                 target_files, cols[0]
             ).sortWithinPartitions(cols[0])
         else:
-
-            def bounds(col: str) -> tuple[Any, Any]:
-                p = snap.physical_of(col)
-                mins = [f.stats.get(p, {}).get("min") for f in todo]
-                maxs = [f.stats.get(p, {}).get("max") for f in todo]
-                if all(v is not None for v in mins + maxs):
-                    return min(mins), max(maxs)  # pure metadata
-                row = df.agg(
-                    F.min(col).alias("lo"), F.max(col).alias("hi")
-                ).collect()[0]
-                return row["lo"], row["hi"]
-
-            n_buckets = 1 << bits
-            tmp = df
-            for suffix, col in zip(("__bx", "__by"), cols):
-                lo, hi = bounds(col)
-                span = (
-                    (hi - lo + 1)
-                    if (hi is not None and lo is not None)
-                    else 1
-                )
-                b = F.floor(
-                    (F.col(col) - F.lit(lo)).cast("double")
-                    * n_buckets
-                    / F.lit(span)
-                ).cast("long")
-                b = F.least(
-                    F.greatest(b, F.lit(0)), F.lit(n_buckets - 1)
-                )
-                tmp = tmp.withColumn(suffix, F.coalesce(b, F.lit(0)))
-            ordered = (
-                tmp.withColumn(
-                    "__z", F.expr(_interleave_sql("__bx", "__by", bits))
-                )
-                .repartitionByRange(target_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__bx", "__by", "__z")
+            ordered = self._morton_sorted(
+                df, todo, snap, cols, target_files, bits
             )
         adds = self._stage(
             ordered,

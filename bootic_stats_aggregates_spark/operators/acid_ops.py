@@ -2827,6 +2827,37 @@ def tx_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stage_apply_history(
+    spark: SparkSession, sf_dir: str, tbl: MiniLogTable
+) -> None:
+    """The history both keyed-view ops fold: two appends (days <= 15
+    with the NULL days, then days >= 16), one MERGE (days 6-8 get
+    n + 1000, days 1-2 insert as 301-302, days >= 30 delete as not
+    matched by source), a DV delete of days 3-4 and an OPTIMIZE."""
+    c = _day_counters(spark, sf_dir)
+    tbl.append(c.filter((F.col("d") <= 15) | F.col("d").isNull()))
+    tbl.append(c.filter(F.col("d") >= 16))
+    upd = c.filter(F.col("d").between(6, 8)).withColumn(
+        "n", (F.col("n") + F.lit(1000)).cast("long")
+    )
+    new = c.filter(F.col("d").between(1, 2)).withColumn(
+        "d", (F.col("d") + F.lit(300)).cast("long")
+    )
+    tbl.merge_clauses(
+        upd.unionByName(new),
+        keys=("event_type", "d"),
+        prune_col="d",
+        matched=({"action": "update", "set": {"n": "source.n"}},),
+        not_matched=({"action": "insert"},),
+        not_matched_by_source=(
+            {"action": "delete", "condition": "target.d >= 30"},
+        ),
+    )
+    tbl.delete_where_dv("d", 3, 4)
+    tbl.optimize(target_rows=1_000_000)
+    _mark_ready(tbl, sf_dir)
+
+
 @query(
     "tx_apply_changes_keyed",
     oracle=f"""
@@ -2865,28 +2896,7 @@ def tx_apply_changes_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(churn) per sync, never O(table)."""
     tbl, ready = _staged(spark, sf_dir, "apply_keyed")
     if not ready:
-        c = _day_counters(spark, sf_dir)
-        tbl.append(c.filter((F.col("d") <= 15) | F.col("d").isNull()))
-        tbl.append(c.filter(F.col("d") >= 16))
-        upd = c.filter(F.col("d").between(6, 8)).withColumn(
-            "n", (F.col("n") + F.lit(1000)).cast("long")
-        )
-        new = c.filter(F.col("d").between(1, 2)).withColumn(
-            "d", (F.col("d") + F.lit(300)).cast("long")
-        )
-        tbl.merge_clauses(
-            upd.unionByName(new),
-            keys=("event_type", "d"),
-            prune_col="d",
-            matched=({"action": "update", "set": {"n": "source.n"}},),
-            not_matched=({"action": "insert"},),
-            not_matched_by_source=(
-                {"action": "delete", "condition": "target.d >= 30"},
-            ),
-        )
-        tbl.delete_where_dv("d", 3, 4)
-        tbl.optimize(target_rows=1_000_000)
-        _mark_ready(tbl, sf_dir)
+        _stage_apply_history(spark, sf_dir, tbl)
     from ..acid import apply_changes
 
     # bootstrap at the first append, then apply every later commit's
@@ -2978,28 +2988,7 @@ def stream_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     register(spark)
     tbl, ready = _staged(spark, sf_dir, "apply_stream")
     if not ready:
-        c = _day_counters(spark, sf_dir)
-        tbl.append(c.filter((F.col("d") <= 15) | F.col("d").isNull()))
-        tbl.append(c.filter(F.col("d") >= 16))
-        upd = c.filter(F.col("d").between(6, 8)).withColumn(
-            "n", (F.col("n") + F.lit(1000)).cast("long")
-        )
-        new = c.filter(F.col("d").between(1, 2)).withColumn(
-            "d", (F.col("d") + F.lit(300)).cast("long")
-        )
-        tbl.merge_clauses(
-            upd.unionByName(new),
-            keys=("event_type", "d"),
-            prune_col="d",
-            matched=({"action": "update", "set": {"n": "source.n"}},),
-            not_matched=({"action": "insert"},),
-            not_matched_by_source=(
-                {"action": "delete", "condition": "target.d >= 30"},
-            ),
-        )
-        tbl.delete_where_dv("d", 3, 4)
-        tbl.optimize(target_rows=1_000_000)
-        _mark_ready(tbl, sf_dir)
+        _stage_apply_history(spark, sf_dir, tbl)
     ws = tempfile.mkdtemp(prefix="apply_stream_state_")
     boot = os.path.join(ws, "state_boot")
     spark.createDataFrame(

@@ -23,6 +23,7 @@ from ..streaming.runner import run_foreach_batch, stream_table
 from .redis_sink import (
     FakeRedis,
     RedisCounterSink,
+    _or_dash,
     counter_commands,
     path_ranking_commands,
     ranking_commands,
@@ -32,7 +33,7 @@ from .redis_sink import (
 _HASH_ORACLE = """
     WITH agg AS (
       SELECT
-        'stats:' || event_type || ':'
+        'stats:' || COALESCE(event_type, '-') || ':'
           || COALESCE(strftime(ts, '%Y:%m:%d:%H'), '-') AS key,
         CAST(count(*) AS BIGINT) AS n,
         CAST(COALESCE(sum(CAST(round(value * 100) AS BIGINT)), 0) AS BIGINT)
@@ -58,7 +59,7 @@ def snk_redis_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT
       'ZINCRBY' AS cmd,
-      'top_users:' || event_type AS key,
+      'top_users:' || COALESCE(event_type, '-') AS key,
       COALESCE(CAST(user_id AS VARCHAR), '-') AS member,
       CAST(count(*) AS BIGINT) AS delta
     FROM events
@@ -75,7 +76,7 @@ def snk_redis_zset(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT
       'ZINCRBY' AS cmd,
-      'top_paths:' || event_type || ':'
+      'top_paths:' || COALESCE(event_type, '-') || ':'
         || COALESCE(strftime(ts, '%Y:%m:%d'), '-') AS key,
       COALESCE('/p/' || CAST(CAST(json_extract(props, '$.k') AS BIGINT)
                              AS VARCHAR), '-') AS member,
@@ -95,8 +96,9 @@ def snk_redis_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH agg AS (
       SELECT
-        'stats:' || COALESCE(CAST(user_id % 20 AS VARCHAR), '-') || ':' || event_type
-          || ':' || COALESCE(strftime(ts, '%Y:%m:%d:%H'), '-') AS key,
+        'stats:' || COALESCE(CAST(user_id % 20 AS VARCHAR), '-') || ':'
+          || COALESCE(event_type, '-') || ':'
+          || COALESCE(strftime(ts, '%Y:%m:%d:%H'), '-') AS key,
         CAST(count(*) AS BIGINT) AS n,
         CAST(COALESCE(sum(CAST(round(value * 100) AS BIGINT)), 0) AS BIGINT)
           AS cents
@@ -116,16 +118,15 @@ def snk_redis_acct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key arithmetic and per-batch combine are identical."""
     ev = table(spark, sf_dir, "events")
     # NULL policy (hostile-fixture sweep r5): concat_ws silently DROPS a
-    # NULL segment — leaving a three-part key that corrupts the schema —
-    # so the unknown-account bucket is an explicit '-' sentinel; a bucket
+    # NULL segment — leaving a short key that corrupts the schema — so an
+    # unknown account, type or hour is an explicit '-' segment; a bucket
     # whose every value is NULL contributes delta 0, not NULL.
     key = F.concat_ws(
         ":",
         F.lit("stats"),
-        F.coalesce((F.col("user_id") % 20).cast("string"), F.lit("-")),
-        F.col("event_type"),
-        # NULL ts -> explicit '-' bucket segment (hostile sweep r7)
-        F.coalesce(F.date_format("ts", "yyyy:MM:dd:HH"), F.lit("-")),
+        _or_dash((F.col("user_id") % 20).cast("string")),
+        _or_dash(F.col("event_type")),
+        _or_dash(F.date_format("ts", "yyyy:MM:dd:HH")),
     )
     agg = ev.groupBy(key.alias("key")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -149,7 +150,7 @@ def snk_redis_acct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT DISTINCT
       'SADD' AS cmd,
-      'uniq:' || event_type || ':'
+      'uniq:' || COALESCE(event_type, '-') || ':'
       || COALESCE(strftime(ts, '%Y:%m:%d'), '-') AS key,
       COALESCE(CAST(user_id AS VARCHAR), '-') AS member
     FROM events
@@ -165,7 +166,7 @@ def snk_redis_uniq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH agg AS (
       SELECT
-        'stats:' || event_type || ':'
+        'stats:' || COALESCE(event_type, '-') || ':'
           || COALESCE(strftime(ts, '%Y:%m:%d:%H'), '-') AS key,
         CAST(count(*) AS BIGINT) AS n,
         CAST(COALESCE(sum(CAST(round(value * 100) AS BIGINT)), 0) AS BIGINT)
@@ -206,7 +207,7 @@ def stream_redis_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH agg AS (
       SELECT
-        'stats:' || event_type || ':'
+        'stats:' || COALESCE(event_type, '-') || ':'
           || COALESCE(strftime(ts, '%Y:%m:%d:%H'), '-') AS key,
         CAST(count(*) AS BIGINT) AS n,
         CAST(COALESCE(sum(CAST(round(value * 100) AS BIGINT)), 0) AS BIGINT)

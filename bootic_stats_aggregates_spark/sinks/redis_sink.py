@@ -69,9 +69,10 @@ def _or_dash(c: Column) -> Column:
 
 
 def _type_key(prefix: str, fmt: str | None = None) -> Column:
-    """``{prefix}:{event_type}[:{ts formatted by fmt}]``; clock-less events
-    (NULL ts) go to an explicit '-' bucket."""
-    parts = [F.lit(prefix), F.col("event_type")]
+    """``{prefix}:{event_type}[:{ts formatted by fmt}]``; untyped events
+    (NULL event_type) and clock-less events (NULL ts) get an explicit '-'
+    segment."""
+    parts = [F.lit(prefix), _or_dash(F.col("event_type"))]
     if fmt:
         parts.append(_or_dash(F.date_format("ts", fmt)))
     return F.concat_ws(":", *parts)

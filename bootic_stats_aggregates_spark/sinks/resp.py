@@ -159,7 +159,10 @@ class _Handler(socketserver.BaseRequestHandler):
 
     MULTI/EXEC queueing is per-connection state; command application
     happens under the server-wide lock (EXEC applies its whole queue
-    inside one lock hold — atomic relative to every other connection)."""
+    inside one lock hold — atomic relative to every other connection).
+    A queued command's ``+QUEUED`` reply goes out with the EXEC reply, in
+    one send: the bytes and their order are Redis's, without one send
+    call per queued command."""
 
     def handle(self) -> None:  # noqa: C901 - a protocol switch is a switch
         srv = self.server.mini  # type: ignore[attr-defined]
@@ -181,14 +184,14 @@ class _Handler(socketserver.BaseRequestHandler):
                 self.request.sendall(b"+OK\r\n")
                 continue
             if cmd == b"EXEC":
+                queue = txn or []
                 with srv.lock:
-                    reply = srv.exec(txn or [])
+                    reply = srv.exec(queue)
                 txn = None
-                self.request.sendall(reply)
+                self.request.sendall(b"+QUEUED\r\n" * len(queue) + reply)
                 continue
             if txn is not None:
                 txn.append(parts)
-                self.request.sendall(b"+QUEUED\r\n")
                 continue
             with srv.lock:
                 self.request.sendall(srv.apply(parts))
@@ -406,7 +409,8 @@ class RespClient:
         payload = b"".join(frames)
         # Send from a helper thread while THIS thread drains replies: a
         # one-burst sendall deadlocks once the burst outgrows the kernel
-        # socket buffers — the server replies +QUEUED per command, the
+        # socket buffers — the server replies once per command (a
+        # transaction's +QUEUED replies arrive with its EXEC reply), the
         # un-drained replies fill the client's receive buffer, the
         # server's sendall blocks, it stops reading, and the client's
         # own sendall blocks in turn (hit for real by the sf0.1

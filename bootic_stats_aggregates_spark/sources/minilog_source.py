@@ -38,10 +38,12 @@ changes(-1, earliest-retained); a RESUMED offset that fell inside the
 vacuumed window fails loudly (deltas are unrecoverable).
 
 Filter pushdown (4.1's ``pushFilters`` hook) harvests single-column
-range constraints and applies the log's min/max FILE SKIPPING before
-Spark schedules anything — the same stats index as
-``MiniLogTable.read(prune=...)``, now reachable from plain
-``df.filter(...)`` through the native surface; every filter is handed
+range constraints and applies the log's FILE SKIPPING before Spark
+schedules anything — the same skipping code as
+``MiniLogTable.read(prune=...)`` (``_select_entries``: partition values
+ahead of min/max stats, a one-sided range as an open bound), now
+reachable from plain ``df.filter(...)`` through the native surface;
+every filter is handed
 back to Spark for row-level evaluation, so the skip is an optimization,
 never the filter. Column pruning has no hook in 4.1 — a projection
 reads full rows (row-group pruning still applies inside each parquet
@@ -89,6 +91,7 @@ from ..acid import (
     ConstraintViolation,
     MiniLogTable,
     NoSuchVersion,
+    _entry_diff,
     _json_safe,
     _phys,
     plan_write_mapping,
@@ -268,43 +271,6 @@ def _resolve_version(path: str, options: dict):
     return int(version) if version is not None else None
 
 
-def _partition_may_match(f, col: str, lo, hi) -> bool:
-    """DIRECTORY-LEVEL pruning ahead of stats (r9): a partitioned
-    file's value on its partition column is EXACT, so a range mismatch
-    is a proof. Open bounds (None = unbounded); the NULL partition
-    never satisfies a range constraint."""
-    part = getattr(f, "partition", None) or {}
-    if col not in part:
-        return True
-    v = part[col]
-    if v is None:
-        return False
-    try:
-        if lo is not None and v < lo:
-            return False
-        if hi is not None and v > hi:
-            return False
-    except TypeError:
-        return True
-    return True
-
-
-def _file_may_match(f, col: str, lo, hi) -> bool:
-    """Conservative range test with open bounds (None = unbounded):
-    True unless the file's log stats PROVE no matching row exists."""
-    s = f.stats.get(col)
-    if not s or s.get("min") is None or s.get("max") is None:
-        return True
-    try:
-        if lo is not None and s["max"] < lo:
-            return False
-        if hi is not None and s["min"] > hi:
-            return False
-    except TypeError:  # JSON round-trip changed the type: stay safe
-        return True
-    return True
-
-
 class _MiniLogBatchReaderBase(DataSourceReader):
     """Snapshot scan WITHOUT the pushFilters hook: Spark refuses any
     reader that implements pushFilters when
@@ -331,17 +297,11 @@ class _MiniLogBatchReaderBase(DataSourceReader):
             else None
         )
         rids = _with_row_ids(self._options)
-        files = snap.files
-        for col, (lo, hi) in self._ranges.items():
-            # pushed filters name LOGICAL columns; the log stats are
-            # keyed by PHYSICAL name (column mapping)
-            p = snap.physical_of(col)
-            files = [
-                f
-                for f in files
-                if _partition_may_match(f, p, lo, hi)
-                and _file_may_match(f, p, lo, hi)
-            ]
+        # the skipping of MiniLogTable.read(prune=...): partition values
+        # ahead of stats, logical names resolved to physical, open bounds
+        files = tbl._select_entries(
+            snap, [(col, lo, hi) for col, (lo, hi) in self._ranges.items()]
+        )
         return [
             _FilePartition(
                 os.path.join(self._path, f.file),
@@ -1070,13 +1030,9 @@ class _MiniLogCDFStreamReader(DataSourceStreamReader):
                 if v - 1 in vset
                 else None
             )
-            a_files = snap_a.files if snap_a else []
-            b_files = tbl.snapshot(v).files
-            a_ids = {(f.file, f.dv): f for f in a_files}
-            b_ids = {(f.file, f.dv): f for f in b_files}
-            _k = lambda k: (k[0], k[1] or "")  # noqa: E731
-            added = [b_ids[k] for k in sorted(set(b_ids) - set(a_ids), key=_k)]
-            removed = [a_ids[k] for k in sorted(set(a_ids) - set(b_ids), key=_k)]
+            added, removed = _entry_diff(
+                snap_a.files if snap_a else [], tbl.snapshot(v).files
+            )
             if added or removed:
                 parts.append(
                     _CDFPartition(

@@ -92,6 +92,54 @@ def test_merge_empty_updates_is_noop(spark, tbl):
     assert info["rewritten"] == 0 and tbl.version == v
 
 
+_UPSERT = dict(
+    matched=({"action": "update", "set": None},),
+    not_matched=({"action": "insert"},),
+)
+
+
+def test_merge_clauses_into_emptied_table_inserts_everything(spark, tbl):
+    """A target with a schema but no live files (every row deleted) is a
+    valid MERGE target: each source row is not-matched and inserts."""
+    tbl.append(_df(spark, [(1, "a"), (2, "b")]))
+    tbl.delete_where("k", 1, 2)
+    assert tbl.snapshot().files == [] and tbl.snapshot().schema
+    info = tbl.merge_clauses(
+        _df(spark, [(2, "B"), (7, "g")]), keys=("k",), **_UPSERT
+    )
+    assert (info["rewritten"], info["kept"]) == (0, 0)
+    assert sorted(tuple(r) for r in tbl.read().collect()) == [
+        (2, "B"), (7, "g"),
+    ]
+
+
+def test_merge_is_the_whole_row_merge_clauses(spark, tmp_path):
+    """merge() and merge_clauses() with the whole-row clauses leave equal
+    rows, row ids and row-tracked change feeds."""
+    def run(name, verb):
+        t = MiniLogTable(spark, str(tmp_path / name), stats_cols=("k",))
+        t.append(_df(spark, [(1, "a"), (2, "b"), (None, "n")]))
+        t.append(_df(spark, [(10, "j"), (11, "k")]))
+        v0 = t.version
+        info = verb(t, _df(spark, [(2, "B"), (None, None), (5, "e")]))
+        rows = sorted(
+            (tuple(r) for r in t.read_with_row_ids().collect()), key=repr
+        )
+        feed = sorted(
+            (tuple(r) for r in t.changes_with_ids(v0, t.version).collect()),
+            key=repr,
+        )
+        return (info["rewritten"], info["kept"]), rows, feed
+
+    via_merge = run("m", lambda t, src: t.merge(src, keys=("k",)))
+    via_clauses = run(
+        "c", lambda t, src: t.merge_clauses(src, keys=("k",), **_UPSERT)
+    )
+    assert via_merge == via_clauses
+    assert via_merge[0] == (1, 1)
+    assert (2, "B") in {r[:2] for r in via_merge[1]}
+
+
 def test_concurrent_appends_all_land(spark, tmp_path):
     """N racing appenders: every commit must land (appends auto-rebase
     through version races), versions must be a gapless serial order, and

@@ -274,7 +274,8 @@ def test_hostile_keys_commit_to_their_own_keys(spark):
     NULLs go through the sink into a MiniRedisServer over RESP, and every
     hash, zset and set equals the builders' rows. Keys embed the raw event
     type, so a commit that encodes rows into delimited strings and splits
-    them back would send ``stats:a|b:...`` to hash ``stats:a``."""
+    them back would send ``stats:a|b:...`` to hash ``stats:a``. A NULL
+    event type keeps its segment as ``-`` (``stats:-:...``)."""
     from datetime import datetime
 
     from bootic_stats_aggregates_spark.sinks.resp import (
@@ -314,6 +315,13 @@ def test_hostile_keys_commit_to_their_own_keys(spark):
     assert "stats:a" not in got[0]
     assert got[1]["top_users:a|b"] == {b"u|1": 1.0, b"u:2": 1.0}
     assert got[2]["uniq::2024:03:01"] == {b"-"}
+    # a NULL event type keeps its key segment as '-'; concat_ws would
+    # drop it and land the row in the short keys
+    assert got[0]["stats:-:2024:03:01:10"] == {b"n": 1, b"cents": 400}
+    assert got[1]["top_users:-"] == {b"|": 1.0}
+    assert got[2]["uniq:-:2024:03:01"] == {b"|"}
+    assert "stats:2024:03:01:10" not in got[0]
+    assert "top_users" not in got[1] and "uniq:2024:03:01" not in got[2]
 
 
 def test_benchmark_server_serves_the_sink(spark, tmp_path):
